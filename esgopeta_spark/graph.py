@@ -7,16 +7,22 @@ creation).  A path ``root -> f1 -> f2`` is a lazy chain of segments
 (gun/scoped.go:26-34); top-level fields are their own souls
 (gun/scoped_fetch.go:58-62).
 
-Design split:
+Design split: one overlay over one base.
 
+- ``_base`` is the snapshot DataFrame (one row per key), or None for an
+  empty graph.  ``_pending`` is the overlay: the driver-side list of put
+  rows not in ``_base``.  HAM merge is a semilattice join (ham.py), so
+  folding the overlay over the base at read time is exact.
 - **point ops** (``fetch_one``, ``soul_of``, ``put``): genuinely
-  single-key operations.  They resolve path prefixes with memoized
-  point lookups (the reference's soul cache, gun/scoped.go:44-81) —
-  collecting ONE row per hop is the correct plan for a point read, the
-  same way the reference does one map probe per hop.
+  single-key operations.  A lookup is the HAM max of the overlay's rows
+  for the key and ONE ``limit(1)`` probe of ``_base`` — the reference's
+  one map probe per hop (gun/storage.go).  Path prefixes resolve through
+  the memoized soul cache (gun/scoped.go:44-81).  A graph built only
+  from puts has no base, so its point ops run no Spark job.
 - **bulk ops** (``traverse``, ``nodes``, ``edges``): fully distributed,
-  expressed as iterated equi-joins on the quads relation — the
-  GraphX-style analytics subset.  No collect anywhere.
+  expressed as iterated equi-joins on ``quads`` — ``_base`` itself, or
+  ONE ``ham_merge`` of ``_base`` and the overlay.  The GraphX-style
+  analytics subset; no collect anywhere.
 """
 
 from __future__ import annotations
@@ -31,11 +37,11 @@ from esgopeta_spark.ham import empty_quads, ham_merge
 from esgopeta_spark.soul import SoulGen
 from esgopeta_spark.types import (
     QUAD_SCHEMA,
-    UPDATE_SCHEMA,
     VALUE_COLUMNS,
     VALUE_RELATION,
     decode_value,
     encode_value,
+    value_json_py,
 )
 
 
@@ -64,57 +70,33 @@ class PutResult:
     updates: list[dict] = dc_field(default_factory=list)  # the would-be wire message rows
 
 
+def _ham_max(rows):
+    """HAM winner of quad rows: the max by ``(state, value_json)``, the
+    total order ``ham_merge`` uses (ham.py docstring).  ``value_json_py``
+    ≡ ``value_json_col`` is pinned by tests."""
+    return max(rows, key=lambda r: (r["state"], value_json_py(r)), default=None)
+
+
 class GunGraph:
     def __init__(self, spark: SparkSession, quads: DataFrame | None = None, soul_gen: SoulGen | None = None):
         self.spark = spark
-        self._base = quads if quads is not None else empty_quads(spark)
-        # update frames not yet folded into _base.  HAM merge is a
-        # semilattice join (associative, commutative, idempotent —
-        # ham.py module docstring), so folding N puts in ONE aggregate at
-        # read time is value-identical to merging after every put; it
-        # turns a put chain's plan from N nested aggregates into one.
-        self._pending: list[DataFrame] = []
+        self._base = quads  # snapshot, one row per key; None = empty graph
+        self._pending: list[dict] = []  # the overlay: put rows not in _base
+        self._merged: DataFrame | None = None  # cached quads of a non-empty overlay
         self.soul_gen = soul_gen or SoulGen()
         self._soul_cache: dict[tuple[str, ...], str] = {}
-        self._put_count = 0
-        # Driver-side shadow of the put log, kept ONLY while the graph is
-        # built purely by puts on an empty base (quads=None construction).
-        # Point reads (_lookup) then resolve as a python HAM fold over
-        # these rows — zero Spark jobs for the write-then-read scripts the
-        # reference's client API is made of.  None = not tracking (the
-        # base held unknown data); put scripts are small by nature, so the
-        # linear scan is bounded — bulk writes go through streaming/upsert.
-        self._pure_put_rows: list[dict] | None = [] if quads is None else None
-        self._pure_put_fold: DataFrame | None = None  # cached quads of the put log
 
     @property
     def quads(self) -> DataFrame:
-        """Merged snapshot (winner per key).  A pure-put graph builds it
-        straight from the driver-side put log — ONE createDataFrame + one
-        HAM aggregate, however long the put chain, so the plan never
-        compounds and no lineage-bounding checkpoint (which executes
-        eagerly under AQE) is needed.  Otherwise folds any pending put
-        frames on first read and caches the folded frame."""
-        if self._pure_put_rows:
-            if self._pure_put_fold is None:  # cache per (immutable) graph
-                self._pure_put_fold = ham_merge(
-                    self.spark.createDataFrame(self._pure_put_rows, QUAD_SCHEMA)
-                )
-            return self._pure_put_fold
-        if self._pending:
-            u = self._base
-            for p in self._pending:
-                u = u.unionByName(p)
-            self._base = ham_merge(u)
-            self._pending = []
-        return self._base
-
-    @quads.setter
-    def quads(self, df: DataFrame) -> None:
-        self._base = df
-        self._pending = []
-        self._pure_put_rows = None  # external frame: unknown content
-        self._pure_put_fold = None
+        """Merged snapshot (winner per key): ``_base`` itself, or ONE
+        ``ham_merge`` of ``_base`` and the overlay, cached per (immutable)
+        graph — however long the put chain, the plan never nests."""
+        if not self._pending:
+            return self._base if self._base is not None else empty_quads(self.spark)
+        if self._merged is None:
+            overlay = self.spark.createDataFrame(self._pending, QUAD_SCHEMA)
+            self._merged = ham_merge(overlay if self._base is None else self._base.unionByName(overlay))
+        return self._merged
 
     # ------------------------------------------------------------------
     # construction
@@ -127,33 +109,24 @@ class GunGraph:
 
     @classmethod
     def from_rows(cls, spark: SparkSession, rows: Iterable[dict], **kw) -> "GunGraph":
-        df = spark.createDataFrame(list(rows), QUAD_SCHEMA)
-        return cls(spark, ham_merge(df), **kw)
+        """Snapshot graph of driver-side quad rows, HAM-folded on the driver."""
+        by_key: dict[tuple[str, str], list[dict]] = {}
+        for r in rows:
+            by_key.setdefault((r["soul"], r["field"]), []).append(r)
+        winners = [_ham_max(rs) for rs in by_key.values()]
+        return cls(spark, spark.createDataFrame(winners, QUAD_SCHEMA), **kw)
 
     # ------------------------------------------------------------------
     # point reads (reference A1-A5)
     # ------------------------------------------------------------------
 
     def _lookup(self, soul: str, field: str):
-        if self._pure_put_rows is not None:
-            # python HAM fold over the put log: same total order as
-            # ham_merge — (state, value_json) max (ham.py docstring);
-            # value_json_py ≡ value_json_col is pinned by tests
-            from esgopeta_spark.types import value_json_py
-
-            best = None
-            for r in self._pure_put_rows:
-                if r["soul"] == soul and r["field"] == field:
-                    k = (r["state"], value_json_py(r))
-                    if best is None or k > best[0]:
-                        best = (k, r)
-            return best[1] if best else None
-        rows = (
-            self.quads.filter((F.col("soul") == soul) & (F.col("field") == field))
-            .limit(1)
-            .collect()
-        )
-        return rows[0] if rows else None
+        """HAM max of the overlay's rows for the key and one probe of
+        ``_base``; a graph with no base runs no Spark job."""
+        rows = [r for r in self._pending if r["soul"] == soul and r["field"] == field]
+        if self._base is not None:
+            rows += self._base.filter((F.col("soul") == soul) & (F.col("field") == field)).limit(1).collect()
+        return _ham_max(rows)
 
     def soul_of(self, *path: str) -> str | None:
         """Resolve a path prefix to a node soul, memoized (gun/scoped.go:44-81).
@@ -254,20 +227,7 @@ class GunGraph:
 
         g = GunGraph(self.spark, self._base, soul_gen=self.soul_gen)
         g._soul_cache = dict(self._soul_cache)
-        g._put_count = self._put_count + 1
-        if self._pure_put_rows is not None:
-            # pure-put graph: the driver-side log IS the state — no
-            # pending frames, no folds; quads derives in one aggregate
-            g._pure_put_rows = self._pure_put_rows + new_quads
-        else:
-            g._pure_put_rows = None
-            updates_df = self.spark.createDataFrame(new_quads, QUAD_SCHEMA)
-            g._pending = self._pending + [updates_df]
-            # long put chains still need bounded lineage: fold + checkpoint
-            # every 16 pending frames (executes under AQE; pure-put graphs
-            # above never pay this)
-            if len(g._pending) >= 16:
-                g.quads = g.quads.localCheckpoint(eager=False)
+        g._pending = self._pending + new_quads
         return PutResult(graph=g, updates=new_quads)
 
     # ------------------------------------------------------------------

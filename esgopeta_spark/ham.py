@@ -140,9 +140,7 @@ def ham_merge(candidates: DataFrame) -> DataFrame:
     total order is ``(state, value_json)`` — see module docstring for why
     this equals the reference's arrival-order semantics.
     """
-    payload = F.struct(
-        *[F.col(c) for c in VALUE_COLUMNS], F.col("state"), value_json_col().alias("_vj")
-    )
+    payload = F.struct(*[F.col(c) for c in VALUE_COLUMNS], F.col("state"))
     order_key = F.struct(F.col("state").alias("s"), value_json_col().alias("j"))
     merged = (
         candidates.select("soul", "field", *VALUE_COLUMNS, "state")
@@ -163,26 +161,28 @@ class ApplyResult:
     deferred: DataFrame  # update rows held back because state > as_of
 
 
+def split_deferred(updates: DataFrame, as_of_ms: float | None) -> tuple[DataFrame, DataFrame]:
+    """The one future-state deferral split: ``(eligible, deferred)`` quad
+    rows, deferring those with ``state > as_of`` (None defers nothing)."""
+    quads = updates.select("soul", "field", *VALUE_COLUMNS, "state")
+    if as_of_ms is None:
+        return quads, quads.limit(0)
+    future = F.col("state") > F.lit(float(as_of_ms))
+    return quads.filter(~future), quads.filter(future)
+
+
 def ham_apply_updates(quads: DataFrame, updates: DataFrame, as_of_ms: float | None = None) -> ApplyResult:
     """Batch contract for future-state deferral (gun/storage.go:107-117).
 
     The reference *schedules* a put whose state is ahead of the local
-    clock for retry at ``state - now + 100ms``.  In batch that becomes an
-    explicit ``as_of`` split: rows with ``state <= as_of`` merge now, the
-    rest are returned for the caller to carry into the next run (the
-    streaming engine re-expresses this with event-time holdback —
-    see esgopeta_spark.streaming.ham_stream).
+    clock for retry at ``state - now + 100ms``.  In batch that is the
+    ``split_deferred`` split: eligible rows merge now, the rest are
+    returned for the caller to carry into the next run (streaming uses
+    event-time holdback, esgopeta_spark.streaming.ham_stream).
     """
-    update_quads = updates.select("soul", "field", *VALUE_COLUMNS, "state")
-    if as_of_ms is None:
-        eligible = update_quads
-        deferred = update_quads.limit(0)
-    else:
-        eligible = update_quads.filter(F.col("state") <= F.lit(float(as_of_ms)))
-        deferred = update_quads.filter(F.col("state") > F.lit(float(as_of_ms)))
-    base = quads.select("soul", "field", *VALUE_COLUMNS, "state")
+    eligible, deferred = split_deferred(updates, as_of_ms)
+    base = quads.select(*eligible.columns)
     return ApplyResult(quads=ham_merge(base.unionByName(eligible)), deferred=deferred)
-
 
 
 def field_history(updates: DataFrame) -> DataFrame:
@@ -226,6 +226,7 @@ __all__ = [
     "conflict_resolve",
     "ham_merge",
     "ham_apply_updates",
+    "split_deferred",
     "value_json_col",
     "empty_quads",
     "ApplyResult",

@@ -511,21 +511,6 @@ def topk_cosine_lsh(
     )
 
 
-def pairwise_cosine_sample(df: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding", modulus: int = 50) -> DataFrame:
-    """All-pairs cosine restricted to a deterministic id-sampled subset —
-    the bounded variant of the quadratic primitive for stats/QA jobs."""
-    s = df.filter(F.col(id_col) % modulus == 0).select(
-        F.col(id_col).alias("_sid"), as_double(F.col(vec_col)).alias("_sv")
-    )
-    a = s.select(F.col("_sid").alias("id_a"), F.col("_sv").alias("_va"))
-    b = s.select(F.col("_sid").alias("id_b"), F.col("_sv").alias("_vb"))
-    return (
-        a.join(b, F.col("id_a") < F.col("id_b"))
-        .withColumn("cosine_sim", cosine(F.col("_va"), F.col("_vb")))
-        .select("id_a", "id_b", "cosine_sim")
-    )
-
-
 def _ivf_topk_scored(
     corpus: DataFrame,
     queries: DataFrame,

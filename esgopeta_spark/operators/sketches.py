@@ -247,27 +247,6 @@ def cms_estimates(
     )
 
 
-def cms_heavy_hitters(
-    df: DataFrame,
-    key_col: str,
-    threshold: int,
-    weight_col: str | None = None,
-    depth: int = 4,
-    width: int = 256,
-) -> DataFrame:
-    """Keys whose CMS estimate meets ``threshold`` — the classic
-    heavy-hitters query.  CMS never under-counts, so every true heavy
-    hitter survives (no false negatives; the accuracy test also bounds
-    the over-count).  The candidate set here is the distinct keys of
-    ``df`` itself (exact, oracle-friendly); at 100 TB the candidate set
-    would be an external/sampled list fed to ``cms_estimates`` — the
-    probe plan is identical either way."""
-    keys = df.select(key_col).distinct()
-    return cms_estimates(df, keys, key_col, weight_col, depth, width).filter(
-        F.col("est_cnt") >= F.lit(int(threshold))
-    )
-
-
 # ---------------------------------------------------------------------------
 # Bloom-filter semi-join prefilter — the classic distributed-join
 # optimization (runtime filter pushdown: Spark's own

@@ -77,8 +77,9 @@ def graph_put_replay(spark, sf):
     # The put script is the fixed-size dimension content (nation=25,
     # region=5 at EVERY SF — dbgen never scales them), precomputed as
     # literals so the entry builds its plan execution-free: no driver
-    # collect, and the pure-put point-read fast path (graph._lookup)
-    # resolves lazy-parent lookups without Spark jobs.  The literals are
+    # collect, and a graph with no base resolves lazy-parent lookups
+    # from its driver-side put overlay (graph._lookup) without Spark
+    # jobs.  The literals are
     # pinned against the live testdata tables by
     # tests/test_graph.py::test_put_replay_literals_match_testdata — if
     # the generator's naming ever drifts, that test fails loudly.

@@ -3,28 +3,32 @@
 The reference keeps everything in one in-memory map (gun/storage.go).
 Our durable layout is parquet with an explicit 100 TB posture:
 
-- ``write_quads`` buckets rows by ``hash(soul) % n_buckets`` into a
-  partition column, so (a) path-traversal joins on soul co-locate by
+- ``write_buckets`` is the one bucket write: it hashes rows by
+  ``hash(soul) % n_buckets`` into a partition column and writes one
+  directory per bucket, so (a) path-traversal joins on soul co-locate by
   partition, (b) point reads prune to one bucket directory, (c) the
   HAM-merge shuffle can be avoided entirely when both sides share the
-  bucketing.  (Hive-style bucketed tables would use the metastore; a
+  bucketing.  ``write_quads`` (whole snapshots) and
+  ``streaming.upsert.ham_upsert_batch`` (touched buckets) both stage
+  through it.  (Hive-style bucketed tables would use the metastore; a
   plain-directory layout keeps the same join locality via partition
   pruning without one.)
 - ``read_quads`` prunes by bucket when a soul is given.
 - ``read_any`` is the generic format front-door (parquet/json/csv).
 
-**Atomic commits (round 5).**  The store is a SNAPSHOT-MANIFEST layout
-(Iceberg's core idea, sized down): data files live in immutable
+**Atomic commits.**  The store is a SNAPSHOT-MANIFEST layout (Iceberg's
+core idea, sized down): data files live in immutable
 ``commits/c<seq>/`` directories; ``_quads_meta.json`` is the single
 source of truth mapping each bucket (and the deferred-update pending
-set) to the commit that last wrote it.  Writers stage a whole commit
-directory first and then publish with one atomic manifest rename
+set) to the commit that last wrote it.  A path without it is not a
+store: readers raise ``FileNotFoundError``.  Writers stage a whole
+commit directory first and then publish with one atomic manifest rename
 (``os.replace`` — swap for a conditional PUT on an object store), so a
 crash at ANY point leaves readers on the previous consistent snapshot:
-bucket data and the pending set can never be observed half-updated
-(the r4 VERDICT crash-window finding).  Readers resolve live bucket
-directories through the manifest, which also makes point-read pruning
-a direct path lookup instead of a partition filter.
+bucket data and the pending set can never be observed half-updated.
+Readers resolve live bucket directories through the manifest, which
+also makes point-read pruning a direct path lookup instead of a
+partition filter.
 """
 
 from __future__ import annotations
@@ -83,18 +87,6 @@ def gc_unreferenced_commits(path: str, manifest: dict) -> None:
             shutil.rmtree(os.path.join(commits_dir, d), ignore_errors=True)
 
 
-def legacy_bucket_dirs(path: str) -> list[str]:
-    """Root-level ``soul_bucket=*`` dirs of a pre-manifest flat store.
-    Readers of legacy stores must target these explicitly: a bare root
-    scan breaks (mixed-depth partition discovery) once any commits/
-    staging tree exists — e.g. after a crashed upgrade attempt."""
-    if not os.path.isdir(path):
-        return []
-    return sorted(
-        os.path.join(path, d) for d in os.listdir(path) if d.startswith("soul_bucket=")
-    )
-
-
 def live_bucket_paths(path: str, manifest: dict, buckets=None) -> list[str]:
     """Absolute live data directories, optionally restricted to a bucket
     subset (point reads / bucket-local rewrite)."""
@@ -105,13 +97,18 @@ def live_bucket_paths(path: str, manifest: dict, buckets=None) -> list[str]:
     return out
 
 
-def write_quads(quads: DataFrame, path: str, n_buckets: int = DEFAULT_BUCKETS, mode: str = "overwrite") -> None:
-    if mode != "overwrite":
-        raise ValueError("write_quads commits whole snapshots; mode must be 'overwrite'")
-    prev = load_manifest(path)
-    seq = (prev.get("seq", -1) + 1) if prev else 0  # legacy meta has no seq
-    cid = f"c{seq:06d}"
-    data_dir = os.path.join(path, "commits", cid, "data")
+def bucket_ids(df: DataFrame, n_buckets: int) -> list[int]:
+    """The buckets the souls of ``df`` hash to (one small Spark job)."""
+    return [r["soul_bucket"] for r in df.select(_bucket_expr(n_buckets)).distinct().collect()]
+
+
+def write_buckets(quads: DataFrame, path: str, commit_rel: str, n_buckets: int) -> dict[str, str]:
+    """Stage ``quads`` into ``<path>/<commit_rel>/data``, one directory per
+    soul bucket (hash -> repartition -> partitionBy write).  Returns the
+    written buckets as manifest entries: bucket -> directory relative to
+    ``path``."""
+    data_rel = f"{commit_rel}/data"
+    data_dir = os.path.join(path, data_rel)
     (
         quads.withColumn("soul_bucket", _bucket_expr(n_buckets))
         .repartition("soul_bucket")
@@ -119,62 +116,45 @@ def write_quads(quads: DataFrame, path: str, n_buckets: int = DEFAULT_BUCKETS, m
         .partitionBy("soul_bucket")
         .parquet(data_dir)
     )
-    written = [
-        int(d.split("=", 1)[1])
-        for d in os.listdir(data_dir)
-        if d.startswith("soul_bucket=")
-    ]
+    return {
+        d.split("=", 1)[1]: f"{data_rel}/{d}" for d in os.listdir(data_dir) if d.startswith("soul_bucket=")
+    }
+
+
+def write_quads(quads: DataFrame, path: str, n_buckets: int = DEFAULT_BUCKETS, mode: str = "overwrite") -> None:
+    if mode != "overwrite":
+        raise ValueError("write_quads commits whole snapshots; mode must be 'overwrite'")
+    prev = load_manifest(path)
+    seq = prev["seq"] + 1 if prev else 0
     # the bucket count is part of the layout; persist it so readers can't
     # silently prune with the wrong modulus
     manifest = {
         "n_buckets": n_buckets,
         "seq": seq,
-        "buckets": {str(b): f"commits/{cid}/data/soul_bucket={b}" for b in written},
+        "buckets": write_buckets(quads, path, f"commits/c{seq:06d}", n_buckets),
         "pending": None,
     }
     publish_manifest(path, manifest)
     gc_unreferenced_commits(path, manifest)
-    if prev is not None and "buckets" not in prev:
-        # overwrote a legacy flat-layout store: its root-level bucket dirs
-        # are fully superseded by this snapshot (best-effort cleanup)
-        for d in os.listdir(path):
-            if d.startswith("soul_bucket=") or d == "_pending":
-                shutil.rmtree(os.path.join(path, d), ignore_errors=True)
-
-
-def _empty_quads(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame([], QUAD_SCHEMA)
 
 
 def read_quads(spark: SparkSession, path: str, soul: str | None = None) -> DataFrame:
-    cols = [f.name for f in QUAD_SCHEMA.fields]
     manifest = load_manifest(path)
-    if manifest is None or "buckets" not in manifest:
-        # legacy flat layout (pre-manifest stores).  Explicit leaf dirs,
-        # never a bare root scan: an orphaned commits/ staging tree from
-        # a crashed upgrade must not break reads (mixed-depth discovery)
-        leaf = legacy_bucket_dirs(path)
-        if leaf:
-            df = spark.read.schema(QUAD_SCHEMA).parquet(*leaf)
-        else:
-            df = spark.read.parquet(path)  # unpartitioned legacy write
-        if soul is not None:
-            df = df.filter(F.col("soul") == soul)
-        return df.select(cols)
+    if manifest is None:
+        raise FileNotFoundError(f"no quads store at {path}: {MANIFEST} is missing")
+    buckets = None
     if soul is not None:
         # point read: the manifest resolves the soul's bucket to ONE live
         # directory — pruning by path, no partition filter needed
-        row = spark.range(1).select(
-            F.pmod(F.xxhash64(F.lit(soul)), F.lit(manifest["n_buckets"])).alias("b")
-        ).collect()
-        paths = live_bucket_paths(path, manifest, {int(row[0]["b"])})
-        if not paths:
-            return _empty_quads(spark)
-        return spark.read.parquet(*paths).filter(F.col("soul") == soul).select(cols)
-    paths = live_bucket_paths(path, manifest)
+        one = spark.range(1).select(F.lit(soul).alias("soul"))
+        buckets = {one.select(_bucket_expr(manifest["n_buckets"])).first()[0]}
+    paths = live_bucket_paths(path, manifest, buckets)
     if not paths:
-        return _empty_quads(spark)
-    return spark.read.parquet(*paths).select(cols)
+        return spark.createDataFrame([], QUAD_SCHEMA)
+    df = spark.read.parquet(*paths)
+    if soul is not None:
+        df = df.filter(F.col("soul") == soul)
+    return df.select([f.name for f in QUAD_SCHEMA.fields])
 
 
 def read_any(spark: SparkSession, path: str, fmt: str | None = None, schema=None, **options) -> DataFrame:

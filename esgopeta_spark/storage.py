@@ -9,8 +9,10 @@ Reference: gun/storage.go —
   a partition-prunable filter, not a background thread.
 - **Deferred future writes** (gun/storage.go:107-117): a put whose state
   is ahead of the local clock is re-attempted later, never dropped.  The
-  batch contract is an explicit ``as_of`` clock: eligible rows merge
-  now, the remainder rides along until ``advance_to`` passes their state.
+  batch contract is an explicit ``as_of`` clock: ``QuadStore.merge`` is
+  ``ham.ham_apply_updates`` at the store's clock (the one deferral split,
+  ``ham.split_deferred``); the deferred remainder rides along until
+  ``advance_to`` passes its state.
 - **Tracking policy** (gun/gun.go:59-78): store-everything /
   store-requested (only keys already present) / store-nothing, applied
   to *observed* wire traffic.  ``TrackingRequested`` is a semi-join
@@ -26,8 +28,7 @@ from enum import Enum
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from esgopeta_spark.ham import ham_merge
-from esgopeta_spark.types import VALUE_COLUMNS
+from esgopeta_spark.ham import ham_apply_updates
 
 DEFAULT_TTL_MS = 7 * 60 * 60 * 1000  # gun/gun.go:84-85: 7 hours
 
@@ -76,12 +77,9 @@ class QuadStore:
         return cls(quads=quads, deferred=quads.limit(0), now_ms=now_ms)
 
     def merge(self, updates: DataFrame) -> "QuadStore":
-        cand = updates.select("soul", "field", *VALUE_COLUMNS, "state")
-        pool = self.deferred.unionByName(cand)
-        eligible = pool.filter(F.col("state") <= F.lit(self.now_ms))
-        still_deferred = pool.filter(F.col("state") > F.lit(self.now_ms))
-        merged = ham_merge(self.quads.unionByName(eligible))
-        return QuadStore(quads=merged, deferred=still_deferred, now_ms=self.now_ms)
+        pool = self.deferred.unionByName(updates.select(*self.deferred.columns))
+        res = ham_apply_updates(self.quads, pool, as_of_ms=self.now_ms)
+        return QuadStore(quads=res.quads, deferred=res.deferred, now_ms=self.now_ms)
 
     def advance_to(self, now_ms: float) -> "QuadStore":
         s = QuadStore(quads=self.quads, deferred=self.deferred, now_ms=float(now_ms))

@@ -5,29 +5,29 @@ gun/scoped_put.go:50-185 + storage merge gun/storage.go:91-122).
 Each micro-batch of update messages is merged into the bucketed quads
 store (sources/io.py layout) with these scale properties:
 
-- **bucket-local rewrite**: only the ``soul_bucket`` directories touched
-  by the batch are read and replaced; the other ``n_buckets - 1``
-  directories are never scanned.  At 100 TB a micro-batch touches a
-  bounded set of buckets, so upsert cost tracks batch size, not store
-  size.
-- **atomic snapshot commit** (round 5, sources/io.py layout): merged
-  buckets AND the new pending set are staged into an immutable
-  ``commits/c<seq>/`` directory, then published with ONE atomic
-  manifest swap.  A crash at any point — including between the bucket
-  write and the pending write, the r4 VERDICT crash window — leaves
-  readers on the previous consistent snapshot; deferred rows can never
-  replay against a half-new store.  Staging also removes the old
-  pre-write ``localCheckpoint``: the commit dir is new, so the plan
-  never overwrites what it reads.
+- **bucket-local rewrite**: only the bucket directories touched by the
+  batch are read and replaced, through ``sources.io.write_buckets``; the
+  other ``n_buckets - 1`` directories are never scanned.  At 100 TB a
+  micro-batch touches a bounded set of buckets, so upsert cost tracks
+  batch size, not store size.
+- **atomic snapshot commit** (sources/io.py layout): merged buckets AND
+  the new pending set are staged into an immutable ``commits/c<seq>/``
+  directory, then published with ONE atomic manifest swap.  A crash at
+  any point — including between the bucket write and the pending write
+  — leaves readers on the previous consistent snapshot; deferred rows
+  can never replay against a half-new store.  The commit dir is new, so
+  the plan never overwrites what it reads.
 - **idempotent by construction**: HAM merge is associative, commutative
   and idempotent, so foreachBatch's at-least-once replay converges to
   the same store (no dedup bookkeeping; the reference needs
   ``storedPuts`` for this, gun/message.go:26-34 — idempotence makes it
   unnecessary, SURVEY.md §4.1).
-- **future-state deferral** (gun/storage.go:107-117): rows whose state
-  is ahead of the batch's ``as_of`` clock are parked in the snapshot's
-  pending set and re-offered to every later batch until their time
-  arrives — the batch re-expression of the reference's scheduled retry.
+- **future-state deferral** (gun/storage.go:107-117): the batch and the
+  carried pending set are split once by ``ham.split_deferred``; rows
+  whose state is ahead of the batch's ``as_of`` clock form the new
+  pending set, published in the same manifest commit and re-offered to
+  every later batch until their time arrives — the batch re-expression
+  of the reference's scheduled retry.
 """
 
 from __future__ import annotations
@@ -37,45 +37,39 @@ import time
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from esgopeta_spark.ham import ham_apply_updates, ham_merge
+from esgopeta_spark.ham import empty_quads, ham_merge, split_deferred
 from esgopeta_spark.sources.io import (
     DEFAULT_BUCKETS,
-    _bucket_expr,
+    bucket_ids,
     gc_unreferenced_commits,
-    legacy_bucket_dirs,
     live_bucket_paths,
     load_manifest,
     publish_manifest,
+    write_buckets,
 )
-from esgopeta_spark.types import QUAD_SCHEMA, VALUE_COLUMNS
+from esgopeta_spark.types import QUAD_SCHEMA
 
 _QUAD_COLS = [f.name for f in QUAD_SCHEMA.fields]
 
 
-def _pending_dir(store_path: str) -> str:
-    """Legacy (pre-manifest) pending location, still honored on read so
-    old stores upgrade in place on their first commit."""
-    return os.path.join(store_path, "_pending")
+def _pending_of(spark: SparkSession, store_path: str, manifest: dict | None) -> DataFrame | None:
+    """The deferred-update carry set ``manifest`` names, or None.  A
+    failure reading it propagates: swallowing it would silently drop
+    deferred updates."""
+    if manifest is None or not manifest["pending"]:
+        return None
+    return spark.read.schema(QUAD_SCHEMA).parquet(os.path.join(store_path, manifest["pending"]))
 
 
 def read_pending(spark: SparkSession, store_path: str) -> DataFrame:
     """The store's current deferred-update carry set (empty frame when
     the store has none), resolved through the manifest snapshot."""
     manifest = load_manifest(store_path)
-    if manifest is not None and manifest.get("pending"):
-        return (
-            spark.read.schema(QUAD_SCHEMA)
-            .parquet(os.path.join(store_path, manifest["pending"]))
-            .select(*_QUAD_COLS)
-        )
-    # legacy: no manifest at all, OR a pre-manifest {"n_buckets": N} one
-    if (manifest is None or "buckets" not in manifest) and os.path.isdir(
-        _pending_dir(store_path)
-    ):
-        return spark.read.parquet(_pending_dir(store_path)).select(*_QUAD_COLS)
-    return spark.createDataFrame([], QUAD_SCHEMA)
+    if manifest is None:
+        raise FileNotFoundError(f"no quads store at {store_path}: its manifest is missing")
+    pending = _pending_of(spark, store_path, manifest)
+    return pending if pending is not None else empty_quads(spark)
 
 
 def ham_upsert_batch(
@@ -86,109 +80,37 @@ def ham_upsert_batch(
     as_of_ms: float | None = None,
 ) -> None:
     """Merge one batch of updates (UPDATE_SCHEMA or quad-shaped rows)
-    into the bucketed quads store at ``store_path``.  Callable directly
-    (batch put) or from foreachBatch (streaming put).  Stage-then-publish:
-    nothing under the live manifest changes until the final atomic swap."""
+    into the bucketed quads store at ``store_path``, creating the store
+    if the path has none.  Callable directly (batch put) or from
+    foreachBatch (streaming put).  Stage-then-publish: nothing under the
+    live manifest changes until the final atomic swap."""
     manifest = load_manifest(store_path)
-    # legacy = pre-manifest layout: flat soul_bucket=* dirs under the
-    # root with a {"n_buckets": N} meta (no "buckets"/"seq"/"pending")
-    legacy = manifest is not None and "buckets" not in manifest
-    if manifest is not None and manifest.get("n_buckets"):
+    if manifest is not None:
         # the modulus is part of the layout; an argument mismatch would
         # scatter souls across inconsistent buckets
         n_buckets = manifest["n_buckets"]
-    incoming = batch.select(*_QUAD_COLS)
-    # a real failure reading the pending carry must propagate, or
-    # deferred updates are silently dropped (explicit paths, no bare
-    # except).  Manifest stores name their pending snapshot; legacy
-    # stores may have a _pending dir.
-    if manifest is not None and manifest.get("pending"):
-        carried = (
-            spark.read.schema(QUAD_SCHEMA)
-            .parquet(os.path.join(store_path, manifest["pending"]))
-            .select(*_QUAD_COLS)
-        )
-        incoming = incoming.unionByName(carried)
-    elif (manifest is None or legacy) and os.path.isdir(_pending_dir(store_path)):
-        carried = spark.read.parquet(_pending_dir(store_path)).select(*_QUAD_COLS)
-        incoming = incoming.unionByName(carried)
-
     if as_of_ms is None:
         as_of_ms = time.time() * 1000.0
-    eligible = incoming.filter(F.col("state") <= F.lit(float(as_of_ms)))
-    deferred = incoming.filter(F.col("state") > F.lit(float(as_of_ms)))
+    incoming = batch.select(*_QUAD_COLS)
+    # no empty frame for a missing pending set: a local empty frame would
+    # start Python workers in a job that otherwise runs none
+    pending = _pending_of(spark, store_path, manifest)
+    if pending is not None:
+        incoming = incoming.unionByName(pending)
+    eligible, deferred = split_deferred(incoming, as_of_ms)
 
-    eligible = eligible.withColumn("soul_bucket", _bucket_expr(n_buckets))
-    # (the legacy-upgrade branch folds the whole store and doesn't need
-    # the touched set — skip its collect job there)
-    touched = (
-        []
-        if legacy
-        else [int(r["soul_bucket"]) for r in eligible.select("soul_bucket").distinct().collect()]
-    )
-
-    seq = (manifest["seq"] + 1) if manifest is not None and not legacy else 0
-    cid = f"c{seq:06d}"
-    commit_rel = f"commits/{cid}"
-    commit_dir = os.path.join(store_path, commit_rel)
-    buckets = dict(manifest["buckets"]) if manifest is not None and not legacy else {}
-
-    if legacy:
-        # one-time in-place upgrade: fold the ENTIRE flat store into this
-        # first commit so every legacy bucket becomes manifest-addressed
-        # (bucket-local rewrite resumes from the next batch).  Read the
-        # flat layout via its EXPLICIT leaf dirs, never a bare root scan:
-        # a crashed earlier upgrade attempt may have left an orphaned
-        # commits/ staging tree under the root, and mixed-depth partition
-        # discovery would fail every retry (crash/retry safety).
-        legacy_paths = legacy_bucket_dirs(store_path)
-        if legacy_paths:
-            existing = (
-                spark.read.schema(QUAD_SCHEMA).parquet(*legacy_paths).select(*_QUAD_COLS)
-            )
-        else:
-            existing = spark.createDataFrame([], QUAD_SCHEMA).select(*_QUAD_COLS)
-        merged = ham_merge(existing.unionByName(eligible.select(*_QUAD_COLS)))
-        data_dir = os.path.join(commit_dir, "data")
-        (
-            merged.withColumn("soul_bucket", _bucket_expr(n_buckets))
-            .repartition("soul_bucket")
-            .write.mode("overwrite")
-            .partitionBy("soul_bucket")
-            .parquet(data_dir)
-        )
-        buckets = {
-            d.split("=", 1)[1]: f"{commit_rel}/data/{d}"
-            for d in os.listdir(data_dir)
-            if d.startswith("soul_bucket=")
-        }
-    elif touched:
-        existing_paths = (
-            live_bucket_paths(store_path, manifest, set(touched))
-            if manifest is not None
-            else []
-        )
-        if existing_paths:
-            existing = spark.read.schema(QUAD_SCHEMA).parquet(*existing_paths).select(*_QUAD_COLS)
-            merged = ham_merge(existing.unionByName(eligible.select(*_QUAD_COLS)))
-        else:
-            merged = ham_merge(eligible.select(*_QUAD_COLS))
+    seq = manifest["seq"] + 1 if manifest is not None else 0
+    commit_rel = f"commits/c{seq:06d}"
+    buckets = dict(manifest["buckets"]) if manifest is not None else {}
+    touched = set(bucket_ids(eligible, n_buckets))
+    if touched:
+        paths = live_bucket_paths(store_path, manifest, touched) if manifest is not None else []
+        candidates = eligible.unionByName(spark.read.schema(QUAD_SCHEMA).parquet(*paths)) if paths else eligible
         # stage into the NEW commit dir — the plan reads old snapshots
         # and writes fresh paths, so no pre-write materialization needed
-        (
-            merged.withColumn("soul_bucket", _bucket_expr(n_buckets))
-            .repartition("soul_bucket")
-            .write.mode("overwrite")
-            .partitionBy("soul_bucket")
-            .parquet(os.path.join(commit_dir, "data"))
-        )
-        for b in touched:
-            buckets[str(b)] = f"{commit_rel}/data/soul_bucket={b}"
-
+        buckets.update(write_buckets(ham_merge(candidates), store_path, commit_rel, n_buckets))
     # stage the recomputed pending carry in the same commit
-    deferred.select(*_QUAD_COLS).write.mode("overwrite").parquet(
-        os.path.join(commit_dir, "pending")
-    )
+    deferred.write.mode("overwrite").parquet(os.path.join(store_path, commit_rel, "pending"))
 
     # publish: ONE atomic manifest swap commits buckets + pending together
     new_manifest = {
@@ -199,14 +121,6 @@ def ham_upsert_batch(
     }
     publish_manifest(store_path, new_manifest)
     gc_unreferenced_commits(store_path, new_manifest)
-    if legacy:
-        # the flat layout is fully folded into commit 0 — drop the old
-        # root-level bucket dirs and _pending (best-effort, post-publish)
-        import shutil
-
-        for d in os.listdir(store_path):
-            if d.startswith("soul_bucket=") or d == "_pending":
-                shutil.rmtree(os.path.join(store_path, d), ignore_errors=True)
 
 
 def stream_put(

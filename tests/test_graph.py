@@ -100,6 +100,50 @@ def test_put_conflict_respects_ham(spark):
     assert g.fetch_one("r", "n", "f").value == "zz-wins"
 
 
+def test_puts_over_nonempty_base(spark):
+    """Puts over a snapshot base: HAM decides between the overlay and the
+    base row, parents found only in the base are reused, and quads stays
+    ONE merge of base and overlay however puts and fetches interleave."""
+    from esgopeta_spark.ham import ham_merge
+
+    base_rows = [
+        {"soul": "root", "field": "user", **encode_value({"#": "u1"}), "state": 10.0},
+        {"soul": "u1", "field": "name", **encode_value("alice"), "state": 10.0},
+        {"soul": "u1", "field": "age", **encode_value(30), "state": 10.0},
+    ]
+    g = GunGraph.from_rows(spark, base_rows, soul_gen=SoulGen(seed=7))
+    puts = []
+
+    res = g.put(["root", "user", "name"], "old", state=5.0)
+    assert [(u["soul"], u["field"]) for u in res.updates] == [("u1", "name")]  # parent reused
+    g, puts = res.graph, puts + res.updates
+    r = g.fetch_one("root", "user", "name")
+    assert (r.value, r.state) == ("alice", 10.0)  # older than the base row: loses
+
+    res = g.put(["root", "user", "name"], "bob", state=10.0)
+    g, puts = res.graph, puts + res.updates
+    r = g.fetch_one("root", "user", "name")
+    assert (r.value, r.state) == ("bob", 10.0)  # equal state, '"bob"' > '"alice"': wins
+    res = g.put(["root", "user", "name"], "al", state=10.0)
+    g, puts = res.graph, puts + res.updates
+    assert g.fetch_one("root", "user", "name").value == "bob"  # equal state, smaller: loses
+
+    res = g.put(["root", "other", "x"], 1, state=20.0)
+    g, puts = res.graph, puts + res.updates
+    assert g.fetch_one("root", "other", "x").value == 1
+    assert g.fetch_one("root", "user", "age").value == 30
+
+    want = ham_merge(
+        spark.createDataFrame(base_rows, QUAD_SCHEMA).unionByName(spark.createDataFrame(puts, QUAD_SCHEMA))
+    )
+    got_rows = {(r["soul"], r["field"]): tuple(r) for r in g.quads.collect()}
+    want_rows = {(r["soul"], r["field"]): tuple(r) for r in want.collect()}
+    assert got_rows == want_rows and len(got_rows) == 5
+    plan = g.quads._jdf.queryExecution().logical().toString()
+    aggregates = [line for line in plan.splitlines() if line.lstrip(" :+-|").startswith("Aggregate")]
+    assert len(aggregates) == 1, plan
+
+
 def test_pubsub_update_shape(spark):
     """FIXTURES.md scenario 10 (TestGunPubSubSimpleRemote shape): a second
     writer's update lands in the first graph via the update log."""
@@ -241,8 +285,9 @@ def test_put_replay_literals_match_testdata(spark, sf_dir):
 
 
 def test_put_replay_entry_is_execution_free(spark, sf_dir):
-    """The pure-put fast path (graph._lookup python HAM fold) means the
-    35-put replay builds its result plan without running ANY Spark job."""
+    """A graph with no base folds its put overlay on the driver
+    (graph._lookup), so the 35-put replay builds its result plan without
+    running ANY Spark job."""
     from esgopeta_spark.plans import REGISTRY
 
     sc = spark.sparkContext

@@ -304,21 +304,43 @@ def test_stream_put_restart_recovery(spark, tmp_path):
 
 
 def test_upsert_corrupt_pending_store_raises(spark, tmp_path):
-    """A real failure reading the _pending side-store must PROPAGATE —
-    silently swallowing it would drop deferred updates (round-2 advice:
-    the old bare `except` hid corrupt/unreadable carries)."""
+    """A real failure reading the pending set the manifest names must
+    PROPAGATE, from the next upsert and from read_pending — silently
+    swallowing it would drop deferred updates."""
+    import glob
+
     import pytest
 
-    from esgopeta_spark.streaming.upsert import _pending_dir, ham_upsert_batch
+    from esgopeta_spark.sources.io import load_manifest
+    from esgopeta_spark.streaming.upsert import ham_upsert_batch, read_pending
 
     store = str(tmp_path / "store")
-    os.makedirs(_pending_dir(store))
-    with open(os.path.join(_pending_dir(store), "part-00000.parquet"), "wb") as f:
-        f.write(b"this is not parquet")
+    b1 = [q("s1", "f", "v", 100, msg="m1"), q("s9", "g", 1, 2_000_000, msg="m2")]
+    ham_upsert_batch(spark, spark.createDataFrame(b1, UPDATE_SCHEMA), store, n_buckets=4, as_of_ms=1e6)
+    files = glob.glob(os.path.join(store, load_manifest(store)["pending"], "*.parquet"))
+    assert files  # the deferred row is committed in the pending set
+    for path in files:
+        with open(path, "wb") as f:
+            f.write(b"this is not parquet")
 
-    batch = spark.createDataFrame([q("s1", "f", "v", 100, msg="m1")], UPDATE_SCHEMA)
+    batch = spark.createDataFrame([q("s2", "f", "w", 200, msg="m3")], UPDATE_SCHEMA)
     with pytest.raises(Exception):
-        ham_upsert_batch(spark, batch, store, n_buckets=4, as_of_ms=1e9)
+        ham_upsert_batch(spark, batch, store, n_buckets=4, as_of_ms=1e6)
+    with pytest.raises(Exception):
+        read_pending(spark, store).collect()
+
+
+def test_read_path_without_manifest_raises(spark, tmp_path):
+    """A path with no manifest is not a store: readers raise."""
+    import pytest
+
+    from esgopeta_spark.sources.io import read_quads
+    from esgopeta_spark.streaming.upsert import read_pending
+
+    with pytest.raises(FileNotFoundError):
+        read_quads(spark, str(tmp_path / "nothing"))
+    with pytest.raises(FileNotFoundError):
+        read_pending(spark, str(tmp_path / "nothing"))
 
 
 def test_upsert_missing_pending_dir_is_fine(spark, tmp_path):
@@ -477,109 +499,6 @@ def test_kafka_shaped_stream_parse_and_merge(spark, tmp_path):
     for r in spark.sql("select * from kafka_shape").collect():
         final[(r["soul"], r["field"])] = (r["value_string"], r["state"])
     assert final == {("s1", "f"): ("zz", 100.0), ("s2", "f"): ("w", 200.0)}
-
-
-def test_upsert_upgrades_legacy_flat_store_in_place(spark, tmp_path):
-    """A pre-manifest store (flat soul_bucket=* dirs + {'n_buckets': N}
-    meta + a _pending dir) must upgrade on its first commit: every legacy
-    row stays readable, the legacy pending carry is honored, and the
-    layout becomes manifest-addressed (code-review regression, r5)."""
-    import json
-
-    from esgopeta_spark.ham import ham_merge
-    from esgopeta_spark.sources.io import _bucket_expr, load_manifest, read_quads
-    from esgopeta_spark.streaming.upsert import ham_upsert_batch, read_pending
-
-    store = str(tmp_path / "legacy")
-    old_rows = [q(f"s{i}", "f", f"v{i}", 100, msg=f"m{i}") for i in range(12)]
-    legacy = ham_merge(spark.createDataFrame(old_rows, UPDATE_SCHEMA))
-    (
-        legacy.withColumn("soul_bucket", _bucket_expr(4))
-        .write.mode("overwrite")
-        .partitionBy("soul_bucket")
-        .parquet(store)
-    )
-    with open(os.path.join(store, "_quads_meta.json"), "w") as f:
-        json.dump({"n_buckets": 4}, f)  # the exact pre-r5 meta shape
-    os.makedirs(os.path.join(store, "_pending"))
-    spark.createDataFrame(
-        [q("sfuture", "g", 1, 2_000_000, msg="mf")], UPDATE_SCHEMA
-    ).select(*[f.name for f in QUAD_SCHEMA.fields]).write.mode("overwrite").parquet(
-        os.path.join(store, "_pending")
-    )
-
-    # first commit: one new row + one legacy overwrite; clock still
-    # before the pending row's state so it must carry forward
-    batch = [q("s0", "f", "updated", 200, msg="mn"), q("snew", "f", "n", 150, msg="mo")]
-    ham_upsert_batch(spark, spark.createDataFrame(batch, UPDATE_SCHEMA), store, n_buckets=4, as_of_ms=1e6)
-
-    got = {(r["soul"], r["field"]): r["value_string"] for r in read_quads(spark, store).collect()}
-    want = {(f"s{i}", "f"): f"v{i}" for i in range(1, 12)}
-    want[("s0", "f")] = "updated"
-    want[("snew", "f")] = "n"
-    assert got == want
-    assert {r["soul"] for r in read_pending(spark, store).collect()} == {"sfuture"}
-    m = load_manifest(store)
-    assert "buckets" in m and m["seq"] == 0 and m["n_buckets"] == 4
-    assert not os.path.isdir(os.path.join(store, "_pending"))  # folded + cleaned
-
-    # second commit drains the pending row once the clock passes it
-    ham_upsert_batch(
-        spark,
-        spark.createDataFrame([], UPDATE_SCHEMA),
-        store,
-        n_buckets=4,
-        as_of_ms=3_000_000.0,
-    )
-    got2 = {(r["soul"], r["field"]) for r in read_quads(spark, store).collect()}
-    assert ("sfuture", "g") in got2
-    assert read_pending(spark, store).isEmpty()
-
-
-def test_legacy_upgrade_crash_retry_does_not_brick_store(spark, tmp_path, monkeypatch):
-    """Crash/retry safety of the one-time legacy upgrade (r5 review):
-    dying after the commit-0 staging write but before the manifest swap
-    leaves an orphaned commits/ tree under the legacy root — reads and
-    the retried upgrade must still work (explicit leaf-dir reads, never
-    a bare root scan that trips mixed-depth partition discovery)."""
-    import json
-
-    from esgopeta_spark.ham import ham_merge
-    from esgopeta_spark.sources.io import _bucket_expr, read_quads
-    from esgopeta_spark.streaming import upsert
-    from esgopeta_spark.streaming.upsert import ham_upsert_batch
-
-    store = str(tmp_path / "legacy2")
-    old_rows = [q(f"s{i}", "f", f"v{i}", 100, msg=f"m{i}") for i in range(6)]
-    legacy = ham_merge(spark.createDataFrame(old_rows, UPDATE_SCHEMA))
-    (
-        legacy.withColumn("soul_bucket", _bucket_expr(4))
-        .write.mode("overwrite")
-        .partitionBy("soul_bucket")
-        .parquet(store)
-    )
-    with open(os.path.join(store, "_quads_meta.json"), "w") as f:
-        json.dump({"n_buckets": 4}, f)
-
-    def exploding_publish(path, manifest):
-        raise RuntimeError("killed during upgrade publish")
-
-    monkeypatch.setattr(upsert, "publish_manifest", exploding_publish)
-    batch = [q("s0", "f", "updated", 200, msg="mx")]
-    import pytest as _pytest
-
-    with _pytest.raises(RuntimeError):
-        ham_upsert_batch(spark, spark.createDataFrame(batch, UPDATE_SCHEMA), store, n_buckets=4, as_of_ms=1e6)
-    # orphaned staging exists; the legacy store must still read cleanly
-    assert os.path.isdir(os.path.join(store, "commits"))
-    got = {r["soul"]: r["value_string"] for r in read_quads(spark, store).collect()}
-    assert got == {f"s{i}": f"v{i}" for i in range(6)}
-
-    # retry (foreachBatch at-least-once) completes the upgrade
-    monkeypatch.undo()
-    ham_upsert_batch(spark, spark.createDataFrame(batch, UPDATE_SCHEMA), store, n_buckets=4, as_of_ms=1e6)
-    got2 = {r["soul"]: r["value_string"] for r in read_quads(spark, store).collect()}
-    assert got2 == {**{f"s{i}": f"v{i}" for i in range(1, 6)}, "s0": "updated"}
 
 
 def test_streaming_cms_grid_matches_batch(spark, sf_dir):
