@@ -13,10 +13,14 @@ Design split: one overlay over one base.
   empty graph.  ``_pending`` is the overlay: the driver-side list of put
   rows not in ``_base``.  HAM merge is a semilattice join (ham.py), so
   folding the overlay over the base at read time is exact.
-- **point ops** (``fetch_one``, ``soul_of``, ``put``): genuinely
-  single-key operations.  A lookup is the HAM max of the overlay's rows
-  for the key and ONE ``limit(1)`` probe of ``_base`` — the reference's
-  one map probe per hop (gun/storage.go).  Path prefixes resolve through
+- **point ops** (``fetch_one``, ``soul_of``, ``put``, ``node``):
+  genuinely single-key operations.  A lookup is the HAM max of the
+  overlay's rows for the key and ONE probe of ``_base`` — the
+  reference's one map probe per hop (gun/storage.go).  A base read by
+  ``sources.read_quads(spark, path)`` carries its ``StoreSnapshot``, and
+  the probe reads the key's one bucket on the driver with pyarrow: no
+  Spark job.  Any other base (a derived or in-memory frame) is probed
+  with a Spark ``filter(...).limit(1)``.  Path prefixes resolve through
   the memoized soul cache (gun/scoped.go:44-81).  A graph built only
   from puts has no base, so its point ops run no Spark job.
 - **bulk ops** (``traverse``, ``nodes``, ``edges``): fully distributed,
@@ -77,10 +81,20 @@ def _ham_max(rows):
     return max(rows, key=lambda r: (r["state"], value_json_py(r)), default=None)
 
 
+def _ham_fold(rows) -> dict[tuple[str, str], Any]:
+    """HAM winner per ``(soul, field)`` of driver-side quad rows."""
+    by_key: dict[tuple[str, str], list] = {}
+    for r in rows:
+        by_key.setdefault((r["soul"], r["field"]), []).append(r)
+    return {k: _ham_max(rs) for k, rs in by_key.items()}
+
+
 class GunGraph:
     def __init__(self, spark: SparkSession, quads: DataFrame | None = None, soul_gen: SoulGen | None = None):
         self.spark = spark
         self._base = quads  # snapshot, one row per key; None = empty graph
+        # the store snapshot read_quads resolved for exactly this frame
+        self._snapshot = getattr(quads, "_store_snapshot", None)
         self._pending: list[dict] = []  # the overlay: put rows not in _base
         self._merged: DataFrame | None = None  # cached quads of a non-empty overlay
         self.soul_gen = soul_gen or SoulGen()
@@ -110,23 +124,28 @@ class GunGraph:
     @classmethod
     def from_rows(cls, spark: SparkSession, rows: Iterable[dict], **kw) -> "GunGraph":
         """Snapshot graph of driver-side quad rows, HAM-folded on the driver."""
-        by_key: dict[tuple[str, str], list[dict]] = {}
-        for r in rows:
-            by_key.setdefault((r["soul"], r["field"]), []).append(r)
-        winners = [_ham_max(rs) for rs in by_key.values()]
-        return cls(spark, spark.createDataFrame(winners, QUAD_SCHEMA), **kw)
+        return cls(spark, spark.createDataFrame(list(_ham_fold(rows).values()), QUAD_SCHEMA), **kw)
 
     # ------------------------------------------------------------------
     # point reads (reference A1-A5)
     # ------------------------------------------------------------------
 
+    def _probe(self, soul: str, field: str | None = None) -> list:
+        """``_base``'s rows of ``soul`` (and ``field``): a one-bucket
+        pyarrow read of a store snapshot, else a Spark filter."""
+        if self._base is None:
+            return []
+        if self._snapshot is not None:
+            return self._snapshot.rows(soul, field)
+        if field is None:
+            return self._base.filter(F.col("soul") == soul).collect()
+        return self._base.filter((F.col("soul") == soul) & (F.col("field") == field)).limit(1).collect()
+
     def _lookup(self, soul: str, field: str):
         """HAM max of the overlay's rows for the key and one probe of
-        ``_base``; a graph with no base runs no Spark job."""
+        ``_base``; no Spark job unless the base is a derived frame."""
         rows = [r for r in self._pending if r["soul"] == soul and r["field"] == field]
-        if self._base is not None:
-            rows += self._base.filter((F.col("soul") == soul) & (F.col("field") == field)).limit(1).collect()
-        return _ham_max(rows)
+        return _ham_max(rows + self._probe(soul, field))
 
     def soul_of(self, *path: str) -> str | None:
         """Resolve a path prefix to a node soul, memoized (gun/scoped.go:44-81).
@@ -273,9 +292,10 @@ class GunGraph:
         return roots.join(vals, roots["soul"] == vals["_vsoul"], "left").drop("_vsoul")
 
     def node(self, soul: str) -> dict[str, Any]:
-        """Record view of one node (driver-side; point read)."""
-        rows = self.quads.filter(F.col("soul") == soul).collect()
-        return {r["field"]: decode_value(r) for r in rows}
+        """Record view of one node: the HAM max per field of the overlay's
+        rows and one probe of ``_base`` (a point read, like ``_lookup``)."""
+        rows = [r for r in self._pending if r["soul"] == soul] + self._probe(soul)
+        return {f: decode_value(r) for (_, f), r in _ham_fold(rows).items()}
 
     def compact(self) -> "GunGraph":
         g = GunGraph(self.spark, self.quads.localCheckpoint(eager=True), soul_gen=self.soul_gen)

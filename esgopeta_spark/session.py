@@ -1,7 +1,8 @@
 """SparkSession construction with scale-minded defaults.
 
-Test/bench hardware is local[32]; the configs below are chosen so the
-same code runs unchanged on a multi-executor cluster: AQE on (runtime
+The master is local[SPARK_GRAFT_CPUS], by default the cpus this process
+may run on; the configs below are chosen so the same code runs
+unchanged on a multi-executor cluster: AQE on (runtime
 re-planning, skew-join splitting, partition coalescing), broadcast
 threshold sized for dimension tables, Arrow enabled for the Pandas-UDF
 slow path.
@@ -16,7 +17,7 @@ from pyspark.sql import SparkSession
 
 
 def get_spark(app_name: str = "esgopeta-spark", shuffle_partitions: int | None = None) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
     if shuffle_partitions is None:
         shuffle_partitions = int(cpus) if cpus.isdigit() else 32
     builder = (

@@ -13,7 +13,16 @@ Our durable layout is parquet with an explicit 100 TB posture:
   through it.  (Hive-style bucketed tables would use the metastore; a
   plain-directory layout keeps the same join locality via partition
   pruning without one.)
-- ``read_quads`` prunes by bucket when a soul is given.
+- ``read_quads`` prunes by bucket when a soul is given.  ``soul_bucket``
+  is the driver-side twin of the bucket hash (Spark's
+  ``pmod(xxhash64(soul), n)`` in pure Python), so the pruning costs no
+  Spark job.
+- **Snapshot handle.**  A frame returned by ``read_quads(spark, path)``
+  carries the manifest it resolved as a ``StoreSnapshot``
+  (``_store_snapshot`` on that exact object; derived frames have none).
+  ``StoreSnapshot.rows`` reads one bucket's live files on the driver with
+  pyarrow and row filters — the point probe ``GunGraph`` runs instead of
+  a Spark job.
 - ``read_any`` is the generic format front-door (parquet/json/csv).
 
 **Atomic commits.**  The store is a SNAPSHOT-MANIFEST layout (Iceberg's
@@ -36,7 +45,10 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import struct
+from dataclasses import dataclass
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -44,10 +56,78 @@ from esgopeta_spark.types import QUAD_SCHEMA
 
 DEFAULT_BUCKETS = 64
 MANIFEST = "_quads_meta.json"
+_COLUMNS = [f.name for f in QUAD_SCHEMA.fields]
 
 
 def _bucket_expr(n_buckets: int):
     return F.pmod(F.xxhash64("soul"), F.lit(n_buckets)).alias("soul_bucket")
+
+
+_M64 = (1 << 64) - 1
+_P1, _P2, _P3 = 0x9E3779B185EBCA87, 0xC2B2AE3D27D4EB4F, 0x165667B19E3779F9
+_P4, _P5 = 0x85EBCA77C2B2AE63, 0x27D4EB2F165667C5
+_SPARK_SEED = 42  # the seed of Spark's xxhash64()
+
+
+def _rotl(x: int, r: int) -> int:
+    return ((x << r) | (x >> (64 - r))) & _M64
+
+
+def _round(acc: int, lane: int) -> int:
+    return _rotl((acc + lane * _P2) & _M64, 31) * _P1 & _M64
+
+
+def soul_bucket(soul: str, n_buckets: int) -> int:
+    """The bucket ``_bucket_expr`` assigns ``soul``: XXH64 (seed 42) of its
+    UTF-8 bytes, read as a signed long, ``pmod n_buckets`` — the same
+    arithmetic as Spark's ``XXH64.hashUnsafeBytes``, on the driver and
+    without a Spark job.  Parity is pinned by tests/test_sources.py."""
+    data = soul.encode("utf-8")
+    n, i = len(data), 0
+    if n >= 32:
+        v = [(_SPARK_SEED + _P1 + _P2) & _M64, (_SPARK_SEED + _P2) & _M64, _SPARK_SEED, (_SPARK_SEED - _P1) & _M64]
+        while i + 32 <= n:
+            v = [_round(acc, lane) for acc, lane in zip(v, struct.unpack_from("<4Q", data, i))]
+            i += 32
+        h = (_rotl(v[0], 1) + _rotl(v[1], 7) + _rotl(v[2], 12) + _rotl(v[3], 18)) & _M64
+        for acc in v:
+            h = ((h ^ _round(0, acc)) * _P1 + _P4) & _M64
+    else:
+        h = (_SPARK_SEED + _P5) & _M64
+    h = (h + n) & _M64
+    while i + 8 <= n:
+        h = (_rotl(h ^ _round(0, struct.unpack_from("<Q", data, i)[0]), 27) * _P1 + _P4) & _M64
+        i += 8
+    if i + 4 <= n:
+        h = (_rotl(h ^ (struct.unpack_from("<I", data, i)[0] * _P1 & _M64), 23) * _P2 + _P3) & _M64
+        i += 4
+    for byte in data[i:]:
+        h = _rotl(h ^ (byte * _P5 & _M64), 11) * _P1 & _M64
+    h ^= h >> 33
+    h = h * _P2 & _M64
+    h ^= h >> 29
+    h = h * _P3 & _M64
+    h ^= h >> 32
+    return (h - (1 << 64) if h >> 63 else h) % n_buckets
+
+
+@dataclass(frozen=True)
+class StoreSnapshot:
+    """One resolved manifest: where each bucket of the snapshot lives."""
+
+    path: str
+    n_buckets: int
+    buckets: dict  # bucket id (str) -> live directory relative to ``path``
+
+    def rows(self, soul: str, field: str | None = None) -> list[dict]:
+        """The snapshot's quad rows of ``soul`` (and ``field``), read from
+        the one bucket the soul hashes to with pyarrow row filters — no
+        Spark job.  A bucket the manifest does not list holds no rows."""
+        rel = self.buckets.get(str(soul_bucket(soul, self.n_buckets)))
+        if rel is None:
+            return []
+        filters = [("soul", "==", soul)] + ([] if field is None else [("field", "==", field)])
+        return pq.read_table(os.path.join(self.path, rel), columns=_COLUMNS, filters=filters).to_pylist()
 
 
 def load_manifest(path: str) -> dict | None:
@@ -139,22 +219,26 @@ def write_quads(quads: DataFrame, path: str, n_buckets: int = DEFAULT_BUCKETS, m
 
 
 def read_quads(spark: SparkSession, path: str, soul: str | None = None) -> DataFrame:
+    """The store's snapshot, or the rows of one ``soul``.  A whole-store
+    frame carries its ``StoreSnapshot`` as ``_store_snapshot``."""
     manifest = load_manifest(path)
     if manifest is None:
         raise FileNotFoundError(f"no quads store at {path}: {MANIFEST} is missing")
-    buckets = None
-    if soul is not None:
-        # point read: the manifest resolves the soul's bucket to ONE live
-        # directory — pruning by path, no partition filter needed
-        one = spark.range(1).select(F.lit(soul).alias("soul"))
-        buckets = {one.select(_bucket_expr(manifest["n_buckets"])).first()[0]}
+    n_buckets = manifest["n_buckets"]
+    # point read: the manifest resolves the soul's bucket to ONE live
+    # directory — pruning by path, no partition filter needed
+    buckets = None if soul is None else {soul_bucket(soul, n_buckets)}
     paths = live_bucket_paths(path, manifest, buckets)
     if not paths:
-        return spark.createDataFrame([], QUAD_SCHEMA)
-    df = spark.read.parquet(*paths)
-    if soul is not None:
-        df = df.filter(F.col("soul") == soul)
-    return df.select([f.name for f in QUAD_SCHEMA.fields])
+        df = spark.createDataFrame([], QUAD_SCHEMA)
+    else:
+        df = spark.read.parquet(*paths)
+        if soul is not None:
+            df = df.filter(F.col("soul") == soul)
+        df = df.select(_COLUMNS)
+    if soul is None:
+        df._store_snapshot = StoreSnapshot(path, n_buckets, dict(manifest["buckets"]))
+    return df
 
 
 def read_any(spark: SparkSession, path: str, fmt: str | None = None, schema=None, **options) -> DataFrame:

@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 
 from esgopeta_spark.graph import ErrNotObject, GunGraph
 from esgopeta_spark.soul import SoulGen
-from esgopeta_spark.types import QUAD_SCHEMA, encode_value
+from esgopeta_spark.types import QUAD_SCHEMA, decode_value, encode_value
 
 
 def fresh_graph(spark):
@@ -100,18 +100,19 @@ def test_put_conflict_respects_ham(spark):
     assert g.fetch_one("r", "n", "f").value == "zz-wins"
 
 
-def test_puts_over_nonempty_base(spark):
+PUT_BASE_ROWS = [
+    {"soul": "root", "field": "user", **encode_value({"#": "u1"}), "state": 10.0},
+    {"soul": "u1", "field": "name", **encode_value("alice"), "state": 10.0},
+    {"soul": "u1", "field": "age", **encode_value(30), "state": 10.0},
+]
+
+
+def _puts_over_base(spark, g):
     """Puts over a snapshot base: HAM decides between the overlay and the
     base row, parents found only in the base are reused, and quads stays
     ONE merge of base and overlay however puts and fetches interleave."""
     from esgopeta_spark.ham import ham_merge
 
-    base_rows = [
-        {"soul": "root", "field": "user", **encode_value({"#": "u1"}), "state": 10.0},
-        {"soul": "u1", "field": "name", **encode_value("alice"), "state": 10.0},
-        {"soul": "u1", "field": "age", **encode_value(30), "state": 10.0},
-    ]
-    g = GunGraph.from_rows(spark, base_rows, soul_gen=SoulGen(seed=7))
     puts = []
 
     res = g.put(["root", "user", "name"], "old", state=5.0)
@@ -134,7 +135,7 @@ def test_puts_over_nonempty_base(spark):
     assert g.fetch_one("root", "user", "age").value == 30
 
     want = ham_merge(
-        spark.createDataFrame(base_rows, QUAD_SCHEMA).unionByName(spark.createDataFrame(puts, QUAD_SCHEMA))
+        spark.createDataFrame(PUT_BASE_ROWS, QUAD_SCHEMA).unionByName(spark.createDataFrame(puts, QUAD_SCHEMA))
     )
     got_rows = {(r["soul"], r["field"]): tuple(r) for r in g.quads.collect()}
     want_rows = {(r["soul"], r["field"]): tuple(r) for r in want.collect()}
@@ -142,6 +143,90 @@ def test_puts_over_nonempty_base(spark):
     plan = g.quads._jdf.queryExecution().logical().toString()
     aggregates = [line for line in plan.splitlines() if line.lstrip(" :+-|").startswith("Aggregate")]
     assert len(aggregates) == 1, plan
+    return g
+
+
+def test_puts_over_nonempty_base(spark):
+    _puts_over_base(spark, GunGraph.from_rows(spark, PUT_BASE_ROWS, soul_gen=SoulGen(seed=7)))
+
+
+def _store_base(spark, tmp_path, rows, n_buckets=4):
+    from esgopeta_spark.sources import read_quads, write_quads
+
+    path = str(tmp_path / "store")
+    write_quads(spark.createDataFrame(rows, QUAD_SCHEMA), path, n_buckets=n_buckets)
+    return read_quads(spark, path)
+
+
+@pytest.mark.parametrize("derived", [False, True], ids=["store_probe", "spark_fallback"])
+def test_puts_over_store_base(spark, tmp_path, derived):
+    """The same HAM cases over a read_quads base, probed by pyarrow on the
+    driver — or, for a derived frame, by Spark — and node() is the record
+    view of quads, overlay included."""
+    base = _store_base(spark, tmp_path, PUT_BASE_ROWS)
+    if derived:
+        base = base.filter(F.lit(True))
+    g = GunGraph(spark, base, soul_gen=SoulGen(seed=7))
+    assert (g._snapshot is None) == derived
+    g = _puts_over_base(spark, g)
+    quads = g.quads.collect()
+    for soul in {r["soul"] for r in quads}:
+        assert g.node(soul) == {r["field"]: decode_value(r) for r in quads if r["soul"] == soul}
+    assert g.node("u1") == {"name": "bob", "age": 30} and g.node("nobody") == {}
+
+
+def test_store_probe_matches_spark_probe(spark, tmp_path):
+    """Row for row, the one-bucket pyarrow probe returns what the Spark
+    probe of the same snapshot returns: every stored key, absent fields,
+    an absent soul, and a soul whose bucket holds no rows."""
+    from esgopeta_spark.sources.io import soul_bucket
+
+    values = [None, 7, 2.5, "text", "ünï", True, False, {"#": "s2"}, 10**20]
+    rows = [
+        {"soul": soul, "field": f"f{j}", **encode_value(values[(i * 3 + j) % len(values)]), "state": float(i + j)}
+        for i, soul in enumerate(["s0", "s1", "s2", "sé", "日本"])
+        for j in range(3)
+    ]
+    base = _store_base(spark, tmp_path, rows, n_buckets=16)
+    store, derived = GunGraph(spark, base), GunGraph(spark, base.filter(F.lit(True)))
+    live = base._store_snapshot.buckets
+    no_bucket = next(s for s in (f"nobody{i}" for i in range(100)) if str(soul_bucket(s, 16)) not in live)
+
+    def canon(rs):
+        return sorted(tuple(r[f.name] for f in QUAD_SCHEMA.fields) for r in rs)
+
+    for r in rows:
+        got = canon(store._probe(r["soul"], r["field"]))
+        assert got == canon([r]) == canon(derived._probe(r["soul"], r["field"]))
+    for soul, field in [("s1", "missing"), ("absent", "f0"), (no_bucket, "f0")]:
+        assert store._probe(soul, field) == [] and derived._probe(soul, field) == []
+    for soul in ["s0", "sé", "日本", "absent", no_bucket]:
+        assert canon(store._probe(soul)) == canon(derived._probe(soul))
+
+
+def test_store_point_ops_run_no_spark_job(spark, tmp_path):
+    """put, fetch_one and node on a read_quads base run no Spark job; the
+    same ops on a derived frame do (so the count is not vacuous)."""
+    base = _store_base(spark, tmp_path, PUT_BASE_ROWS)
+    sc = spark.sparkContext
+
+    def jobs(group, b):
+        sc.setJobGroup(group, group)
+        try:
+            g = GunGraph(spark, b, soul_gen=SoulGen(seed=7))
+            g = g.put(["root", "user", "name"], "bob", state=11.0).graph
+            g = g.put(["root", "other", "x"], 1, state=11.0).graph
+            assert g.fetch_one("root", "user", "name").value == "bob"
+            assert g.fetch_one("root", "user", "age").value == 30
+            assert g.fetch_one("root", "other", "x").value == 1
+            assert g.node("u1") == {"name": "bob", "age": 30}
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    assert jobs("store-point-ops", base) == 0
+    assert jobs("derived-point-ops", base.filter(F.lit(True))) > 0
 
 
 def test_pubsub_update_shape(spark):

@@ -35,6 +35,27 @@ def test_quads_roundtrip_and_bucket_pruning(spark, tmp_path):
     assert "EqualTo(soul,s7)" in plan, plan
 
 
+def test_soul_bucket_matches_spark_bucket_hash(spark):
+    """soul_bucket is the driver twin of the write path's bucket column,
+    Spark's pmod(xxhash64(soul), n): byte lengths 0-70 cover the 32-byte
+    stripe loop and the 8-, 4- and 1-byte tails; non-ASCII and generated
+    souls hash as their UTF-8 bytes."""
+    from esgopeta_spark.soul import SoulGen
+    from esgopeta_spark.sources.io import _bucket_expr, soul_bucket
+
+    souls = ["".join(chr(ord("a") + (n * 7 + k) % 26) for k in range(n)) for n in range(71)]
+    souls += ["é", "日本語", "🙂", "é" * 17, "日本語" * 11, "ßü🙂" * 9, "mixé日🙂" * 5]
+    seeded, unseeded = SoulGen(seed=11), SoulGen()
+    souls += [seeded() for _ in range(20)] + [unseeded() for _ in range(20)]
+    assert {len(s.encode()) for s in souls} >= set(range(71))
+    ns = (1, 7, 16, 64)
+    df = spark.createDataFrame([(s,) for s in souls], "soul string")
+    got = df.select("soul", *[_bucket_expr(n).alias(f"b{n}") for n in ns]).collect()
+    assert len(got) == len(souls)
+    for r in got:
+        assert [r[f"b{n}"] for n in ns] == [soul_bucket(r["soul"], n) for n in ns], r["soul"]
+
+
 def test_read_any_formats(spark, tmp_path):
     df = spark.range(10).select(F.col("id"), (F.col("id") * 2).alias("v"))
     for fmt in ["parquet", "json", "csv"]:
