@@ -103,6 +103,21 @@ def _py_value_json(value: Any) -> str:
 # ---------------------------------------------------------------------------
 
 
+# {"s":"<escaped>"} -> strip the 5-byte prefix and 1-byte suffix
+_STRING_JSON_SQL = (
+    "substring(to_json(named_struct('s', value_string)), 6, "
+    "length(to_json(named_struct('s', value_string))) - 6)"
+)
+_VALUE_JSON_SQL = (
+    "CASE value_type"
+    f" WHEN '{VALUE_NULL}' THEN 'null'"
+    f" WHEN '{VALUE_NUMBER}' THEN coalesce(value_number_raw, CAST(value_number AS STRING))"
+    f" WHEN '{VALUE_STRING}' THEN {_STRING_JSON_SQL}"
+    f" WHEN '{VALUE_BOOL}' THEN CASE WHEN value_bool THEN 'true' ELSE 'false' END"
+    """ ELSE concat('{"#":"', value_relation, '"}') END"""
+)
+
+
 def value_json_col() -> Column:
     """Canonical JSON text of the tagged-union value as a codegen'd column.
 
@@ -111,26 +126,19 @@ def value_json_col() -> Column:
     by UTF-8 bytes under default binary collation, so the same order is
     reproducible in the oracle.  String escaping uses ``to_json`` (Jackson),
     matching DuckDB ``to_json`` / Python ``json.dumps(ensure_ascii=False)``
-    for the printable domain.
+    for the printable domain.  One SQL expression (``_VALUE_JSON_SQL``):
+    building it costs one py4j call instead of a chain of ``Column`` ones.
     """
-    # {"s":"<escaped>"} -> strip the 5-byte prefix and 1-byte suffix
-    s_json = F.expr(
-        "substring(to_json(named_struct('s', value_string)), 6, "
-        "length(to_json(named_struct('s', value_string))) - 6)"
-    )
-    return (
-        F.when(F.col("value_type") == VALUE_NULL, F.lit("null"))
-        .when(
-            F.col("value_type") == VALUE_NUMBER,
-            F.coalesce(F.col("value_number_raw"), F.col("value_number").cast("string")),
-        )
-        .when(F.col("value_type") == VALUE_STRING, s_json)
-        .when(F.col("value_type") == VALUE_BOOL, F.when(F.col("value_bool"), "true").otherwise("false"))
-        .otherwise(F.concat(F.lit('{"#":"'), F.col("value_relation"), F.lit('"}')))
-    )
+    return F.expr(_VALUE_JSON_SQL)
 
 
-def ham_merge(candidates: DataFrame) -> DataFrame:
+_WINNER_SQL = (
+    f"max_by(struct({', '.join(VALUE_COLUMNS)}, state), "
+    f"named_struct('s', state, 'j', {_VALUE_JSON_SQL})) AS _w"
+)
+
+
+def ham_merge(candidates: DataFrame, by: tuple[str, ...] = ()) -> DataFrame:
     """Reduce a bag of quad candidates to the HAM winner per (soul, field).
 
     Input: any DataFrame with the quad columns (extra columns are dropped).
@@ -138,20 +146,15 @@ def ham_merge(candidates: DataFrame) -> DataFrame:
 
     One hash-aggregate (map-side partial + one shuffle on the key); the
     total order is ``(state, value_json)`` — see module docstring for why
-    this equals the reference's arrival-order semantics.
+    this equals the reference's arrival-order semantics.  ``by`` names
+    columns that are functions of ``soul`` (e.g. ``soul_bucket``): they
+    lead the grouping key and the output, so an input already
+    hash-partitioned on them is aggregated with no further exchange.
     """
-    payload = F.struct(*[F.col(c) for c in VALUE_COLUMNS], F.col("state"))
-    order_key = F.struct(F.col("state").alias("s"), value_json_col().alias("j"))
-    merged = (
-        candidates.select("soul", "field", *VALUE_COLUMNS, "state")
-        .groupBy("soul", "field")
-        .agg(F.max_by(payload, order_key).alias("_w"))
-    )
-    return merged.select(
-        "soul",
-        "field",
-        *[F.col(f"_w.{c}").alias(c) for c in VALUE_COLUMNS],
-        F.col("_w.state").alias("state"),
+    return (
+        candidates.groupBy(*by, "soul", "field")
+        .agg(F.expr(_WINNER_SQL))
+        .select(*by, "soul", "field", "_w.*")
     )
 
 

@@ -6,6 +6,16 @@ unchanged on a multi-executor cluster: AQE on (runtime
 re-planning, skew-join splitting, partition coalescing), broadcast
 threshold sized for dimension tables, Arrow enabled for the Pandas-UDF
 slow path.
+
+Local writes go through ``esgopeta_spark.jvm.NioLocalFileSystem`` (the
+jar next to this package's ``jvm/`` source, on the driver class path; in
+local mode the executors share that JVM).  Without libhadoop, Hadoop's
+stock local filesystem sets the mode of every file, ``.crc`` file and
+directory it writes by forking a ``chmod`` process — dozens per parquet
+write, about 7 ms each.  The replacement keeps the checksum layer and
+sets the same mode bits through ``java.nio``.  Streaming checkpoints are
+written through ``FileContext`` (``LocalFs``), which builds its own raw
+filesystem, so they still fork.
 """
 
 from __future__ import annotations
@@ -14,6 +24,9 @@ import os
 import re
 
 from pyspark.sql import SparkSession
+
+NIO_FS_JAR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "jvm", "nio-localfs.jar")
+NIO_FS_CLASS = "esgopeta_spark.jvm.NioLocalFileSystem"
 
 
 def get_spark(app_name: str = "esgopeta-spark", shuffle_partitions: int | None = None) -> SparkSession:
@@ -39,6 +52,8 @@ def get_spark(app_name: str = "esgopeta-spark", shuffle_partitions: int | None =
         .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.driver.extraClassPath", NIO_FS_JAR)
+        .config("spark.hadoop.fs.file.impl", NIO_FS_CLASS)
     )
     return builder.getOrCreate()
 

@@ -3,16 +3,19 @@
 The reference keeps everything in one in-memory map (gun/storage.go).
 Our durable layout is parquet with an explicit 100 TB posture:
 
-- ``write_buckets`` is the one bucket write: it hashes rows by
-  ``hash(soul) % n_buckets`` into a partition column and writes one
-  directory per bucket, so (a) path-traversal joins on soul co-locate by
-  partition, (b) point reads prune to one bucket directory, (c) the
-  HAM-merge shuffle can be avoided entirely when both sides share the
-  bucketing.  ``write_quads`` (whole snapshots) and
-  ``streaming.upsert.ham_upsert_batch`` (touched buckets) both stage
-  through it.  (Hive-style bucketed tables would use the metastore; a
-  plain-directory layout keeps the same join locality via partition
-  pruning without one.)
+- ``write_buckets`` is the one commit write: rows tagged by ``bucketed``
+  with ``soul_bucket = hash(soul) % n_buckets`` and hash-partitioned on
+  it go out in one ``partitionBy`` job, one directory (and one file) per
+  bucket, so (a) path-traversal joins on soul co-locate by partition,
+  (b) point reads prune to one bucket directory, (c) the HAM merge
+  needs no second shuffle when it groups by the bucket too.  The same
+  job writes a commit's deferred-update pending set, unmerged, into the
+  ``soul_bucket=-1`` directory, a value no bucket takes.
+  ``write_quads`` (whole snapshots) and
+  ``streaming.upsert.ham_upsert_batch`` (touched buckets plus pending)
+  both stage through it.  (Hive-style bucketed tables would use the
+  metastore; a plain-directory layout keeps the same join locality via
+  partition pruning without one.)
 - ``read_quads`` prunes by bucket when a soul is given.  ``soul_bucket``
   is the driver-side twin of the bucket hash (Spark's
   ``pmod(xxhash64(soul), n)`` in pure Python), so the pruning costs no
@@ -56,6 +59,7 @@ from esgopeta_spark.types import QUAD_SCHEMA
 
 DEFAULT_BUCKETS = 64
 MANIFEST = "_quads_meta.json"
+PENDING_BUCKET = -1  # the partition value of a commit's pending set
 _COLUMNS = [f.name for f in QUAD_SCHEMA.fields]
 
 
@@ -178,27 +182,39 @@ def live_bucket_paths(path: str, manifest: dict, buckets=None) -> list[str]:
 
 
 def bucket_ids(df: DataFrame, n_buckets: int) -> list[int]:
-    """The buckets the souls of ``df`` hash to (one small Spark job)."""
+    """The buckets the souls of ``df`` hash to (a distinct: under AQE,
+    one shuffle-map job and one result job)."""
     return [r["soul_bucket"] for r in df.select(_bucket_expr(n_buckets)).distinct().collect()]
 
 
-def write_buckets(quads: DataFrame, path: str, commit_rel: str, n_buckets: int) -> dict[str, str]:
-    """Stage ``quads`` into ``<path>/<commit_rel>/data``, one directory per
-    soul bucket (hash -> repartition -> partitionBy write).  Returns the
-    written buckets as manifest entries: bucket -> directory relative to
-    ``path``."""
+def bucketed(df: DataFrame, n_buckets: int) -> DataFrame:
+    """``df`` tagged with its ``soul_bucket`` and hash-partitioned on it:
+    the commit's one exchange.  No partition count — AQE coalesces the
+    shuffle, and each bucket still lands in one task, so in one file."""
+    return df.withColumn("soul_bucket", _bucket_expr(n_buckets)).repartition("soul_bucket")
+
+
+def write_buckets(
+    tagged: DataFrame, path: str, commit_rel: str, pending: DataFrame | None = None
+) -> tuple[dict[str, str], str | None]:
+    """Stage a commit into ``<path>/<commit_rel>/data`` with ONE
+    ``partitionBy`` write job: the quad rows of ``tagged`` (a ``bucketed``
+    frame) into one directory per soul bucket, and the ``pending`` quad
+    rows, as they are and in one file, into the ``soul_bucket=-1``
+    directory, a value no bucket takes.  Returns the manifest entries:
+    bucket -> directory relative to ``path``, and the pending directory
+    (None when no row was pending)."""
     data_rel = f"{commit_rel}/data"
     data_dir = os.path.join(path, data_rel)
-    (
-        quads.withColumn("soul_bucket", _bucket_expr(n_buckets))
-        .repartition("soul_bucket")
-        .write.mode("overwrite")
-        .partitionBy("soul_bucket")
-        .parquet(data_dir)
-    )
-    return {
+    if pending is not None:
+        tag = F.lit(PENDING_BUCKET).cast("bigint").alias("soul_bucket")
+        tagged = tagged.unionByName(pending.select(*_COLUMNS, tag).coalesce(1))
+    tagged.write.mode("overwrite").partitionBy("soul_bucket").parquet(data_dir)
+    entries = {
         d.split("=", 1)[1]: f"{data_rel}/{d}" for d in os.listdir(data_dir) if d.startswith("soul_bucket=")
     }
+    pending_rel = entries.pop(str(PENDING_BUCKET), None)
+    return entries, pending_rel
 
 
 def write_quads(quads: DataFrame, path: str, n_buckets: int = DEFAULT_BUCKETS, mode: str = "overwrite") -> None:
@@ -206,14 +222,10 @@ def write_quads(quads: DataFrame, path: str, n_buckets: int = DEFAULT_BUCKETS, m
         raise ValueError("write_quads commits whole snapshots; mode must be 'overwrite'")
     prev = load_manifest(path)
     seq = prev["seq"] + 1 if prev else 0
+    buckets, _ = write_buckets(bucketed(quads, n_buckets), path, f"commits/c{seq:06d}")
     # the bucket count is part of the layout; persist it so readers can't
     # silently prune with the wrong modulus
-    manifest = {
-        "n_buckets": n_buckets,
-        "seq": seq,
-        "buckets": write_buckets(quads, path, f"commits/c{seq:06d}", n_buckets),
-        "pending": None,
-    }
+    manifest = {"n_buckets": n_buckets, "seq": seq, "buckets": buckets, "pending": None}
     publish_manifest(path, manifest)
     gc_unreferenced_commits(path, manifest)
 

@@ -6,17 +6,26 @@ Each micro-batch of update messages is merged into the bucketed quads
 store (sources/io.py layout) with these scale properties:
 
 - **bucket-local rewrite**: only the bucket directories touched by the
-  batch are read and replaced, through ``sources.io.write_buckets``; the
-  other ``n_buckets - 1`` directories are never scanned.  At 100 TB a
-  micro-batch touches a bounded set of buckets, so upsert cost tracks
-  batch size, not store size.
+  batch are read and replaced; the other directories are never
+  scanned.  At 100 TB a micro-batch touches a bounded set of buckets, so
+  upsert cost tracks batch size, not store size.
+- **one exchange, one write job**: the candidates (batch, carried
+  pending set, touched buckets' live rows) are tagged with their
+  ``soul_bucket`` and hash-partitioned on it once (``sources.io.
+  bucketed``); ``ham_merge`` groups by ``(soul_bucket, soul, field)``,
+  so the aggregate reuses that partitioning.  The merged buckets and the
+  new pending set go out in ONE ``partitionBy`` write
+  (``sources.io.write_buckets``): the pending rows, not merged, in the
+  ``soul_bucket=-1`` directory of the same commit.  With the distinct
+  that finds the touched buckets, a batch runs about five Spark jobs.
 - **atomic snapshot commit** (sources/io.py layout): merged buckets AND
   the new pending set are staged into an immutable ``commits/c<seq>/``
   directory, then published with ONE atomic manifest swap.  A crash at
-  any point — including between the bucket write and the pending write
-  — leaves readers on the previous consistent snapshot; deferred rows
-  can never replay against a half-new store.  The commit dir is new, so
-  the plan never overwrites what it reads.
+  any point leaves readers on the previous consistent snapshot; deferred
+  rows can never replay against a half-new store.  The manifest's
+  ``pending`` names the commit's ``soul_bucket=-1`` directory, or is
+  None when nothing is deferred.  The commit dir is new, so the plan
+  never overwrites what it reads.
 - **idempotent by construction**: HAM merge is associative, commutative
   and idempotent, so foreachBatch's at-least-once replay converges to
   the same store (no dedup bookkeeping; the reference needs
@@ -42,6 +51,7 @@ from esgopeta_spark.ham import empty_quads, ham_merge, split_deferred
 from esgopeta_spark.sources.io import (
     DEFAULT_BUCKETS,
     bucket_ids,
+    bucketed,
     gc_unreferenced_commits,
     live_bucket_paths,
     load_manifest,
@@ -102,23 +112,19 @@ def ham_upsert_batch(
     seq = manifest["seq"] + 1 if manifest is not None else 0
     commit_rel = f"commits/c{seq:06d}"
     buckets = dict(manifest["buckets"]) if manifest is not None else {}
-    touched = set(bucket_ids(eligible, n_buckets))
-    if touched:
-        paths = live_bucket_paths(store_path, manifest, touched) if manifest is not None else []
-        candidates = eligible.unionByName(spark.read.schema(QUAD_SCHEMA).parquet(*paths)) if paths else eligible
-        # stage into the NEW commit dir — the plan reads old snapshots
-        # and writes fresh paths, so no pre-write materialization needed
-        buckets.update(write_buckets(ham_merge(candidates), store_path, commit_rel, n_buckets))
-    # stage the recomputed pending carry in the same commit
-    deferred.write.mode("overwrite").parquet(os.path.join(store_path, commit_rel, "pending"))
+    paths = []
+    if manifest is not None:  # a new store has no old bucket to read back
+        paths = live_bucket_paths(store_path, manifest, set(bucket_ids(eligible, n_buckets)))
+    candidates = eligible.unionByName(spark.read.schema(QUAD_SCHEMA).parquet(*paths)) if paths else eligible
+    # one exchange: hash on soul_bucket, then merge within each bucket;
+    # stage merged buckets and the deferred rows into the NEW commit dir
+    # in one write — the plan reads old snapshots and writes fresh paths
+    merged = ham_merge(bucketed(candidates, n_buckets), by=("soul_bucket",))
+    written, pending_rel = write_buckets(merged, store_path, commit_rel, pending=deferred)
+    buckets.update(written)
 
     # publish: ONE atomic manifest swap commits buckets + pending together
-    new_manifest = {
-        "n_buckets": n_buckets,
-        "seq": seq,
-        "buckets": buckets,
-        "pending": f"{commit_rel}/pending",
-    }
+    new_manifest = {"n_buckets": n_buckets, "seq": seq, "buckets": buckets, "pending": pending_rel}
     publish_manifest(store_path, new_manifest)
     gc_unreferenced_commits(store_path, new_manifest)
 
