@@ -117,11 +117,6 @@ class GunGraph:
     # ------------------------------------------------------------------
 
     @classmethod
-    def from_updates(cls, spark: SparkSession, updates: DataFrame, **kw) -> "GunGraph":
-        """Replay an update log (UPDATE_SCHEMA) into a snapshot graph."""
-        return cls(spark, ham_merge(updates), **kw)
-
-    @classmethod
     def from_rows(cls, spark: SparkSession, rows: Iterable[dict], **kw) -> "GunGraph":
         """Snapshot graph of driver-side quad rows, HAM-folded on the driver."""
         return cls(spark, spark.createDataFrame(list(_ham_fold(rows).values()), QUAD_SCHEMA), **kw)
@@ -223,16 +218,16 @@ class GunGraph:
             import time as _t
 
             state = float(int(_t.time() * 1000))
+        # the path resolves in the new graph's copy of the soul cache, so
+        # the souls this put creates never enter this graph's cache
+        g = GunGraph(self.spark, self._base, soul_gen=self.soul_gen)
+        g._soul_cache = dict(self._soul_cache)
+        g._pending = self._pending
         new_quads: list[dict] = []
         parent = path[0]  # top-level root: soul == field name
-        self._soul_cache[(path[0],)] = parent
         for i in range(1, len(path) - 1):
             prefix = tuple(path[: i + 1])
-            soul = None
-            try:
-                soul = self.soul_of(*prefix)
-            except ErrNotObject:
-                raise
+            soul = g.soul_of(*prefix)
             if soul is None:
                 if fail_without_parent:
                     raise ErrNotObject(f"parent {'/'.join(prefix)} missing")
@@ -240,12 +235,9 @@ class GunGraph:
                 new_quads.append(
                     {"soul": parent, "field": path[i], **encode_value({"#": soul}), "state": state}
                 )
-                self._soul_cache[prefix] = soul
+                g._soul_cache[prefix] = soul
             parent = soul
         new_quads.append({"soul": parent, "field": path[-1], **encode_value(value), "state": state})
-
-        g = GunGraph(self.spark, self._base, soul_gen=self.soul_gen)
-        g._soul_cache = dict(self._soul_cache)
         g._pending = self._pending + new_quads
         return PutResult(graph=g, updates=new_quads)
 
@@ -296,11 +288,6 @@ class GunGraph:
         rows and one probe of ``_base`` (a point read, like ``_lookup``)."""
         rows = [r for r in self._pending if r["soul"] == soul] + self._probe(soul)
         return {f: decode_value(r) for (_, f), r in _ham_fold(rows).items()}
-
-    def compact(self) -> "GunGraph":
-        g = GunGraph(self.spark, self.quads.localCheckpoint(eager=True), soul_gen=self.soul_gen)
-        g._soul_cache = dict(self._soul_cache)
-        return g
 
     # ------------------------------------------------------------------
     # scoped chain API (reference A1: gun/scoped.go) + live subscribe (A6)

@@ -1,7 +1,10 @@
 """Sources & sinks (SURVEY.md §2 E1 + the quads persistence contract).
 
-The reference keeps everything in one in-memory map (gun/storage.go).
-Our durable layout is parquet with an explicit 100 TB posture:
+The reference keeps everything in one in-memory map behind one
+``Storage`` type (gun/storage.go).  Our durable layout is parquet with
+an explicit 100 TB posture, and this module is its one owner: the
+manifest format, the commit naming and the commit protocol live here
+and nowhere else.
 
 - ``write_buckets`` is the one commit write: rows tagged by ``bucketed``
   with ``soul_bucket = hash(soul) % n_buckets`` and hash-partitioned on
@@ -10,22 +13,23 @@ Our durable layout is parquet with an explicit 100 TB posture:
   (b) point reads prune to one bucket directory, (c) the HAM merge
   needs no second shuffle when it groups by the bucket too.  The same
   job writes a commit's deferred-update pending set, unmerged, into the
-  ``soul_bucket=-1`` directory, a value no bucket takes.
-  ``write_quads`` (whole snapshots) and
-  ``streaming.upsert.ham_upsert_batch`` (touched buckets plus pending)
-  both stage through it.  (Hive-style bucketed tables would use the
-  metastore; a plain-directory layout keeps the same join locality via
-  partition pruning without one.)
-- ``read_quads`` prunes by bucket when a soul is given.  ``soul_bucket``
-  is the driver-side twin of the bucket hash (Spark's
-  ``pmod(xxhash64(soul), n)`` in pure Python), so the pruning costs no
-  Spark job.
-- **Snapshot handle.**  A frame returned by ``read_quads(spark, path)``
-  carries the manifest it resolved as a ``StoreSnapshot``
+  ``soul_bucket=-1`` directory, a value no bucket takes.  (Hive-style
+  bucketed tables would use the metastore; a plain-directory layout
+  keeps the same join locality via partition pruning without one.)
+- ``commit`` is the one commit protocol, and both writers use it:
+  ``write_quads`` replaces the whole snapshot (no inherited bucket, no
+  pending set), and ``streaming.upsert.ham_upsert_batch`` rewrites the
+  buckets a batch touches over the ones it inherits, plus the new
+  pending set.
+- **Snapshot handle.**  ``StoreSnapshot`` is a resolved manifest: commit
+  ``seq``, live bucket directories and the pending set.  A frame
+  returned by ``read_quads(spark, path)`` carries the one it resolved
   (``_store_snapshot`` on that exact object; derived frames have none).
   ``StoreSnapshot.rows`` reads one bucket's live files on the driver with
   pyarrow and row filters — the point probe ``GunGraph`` runs instead of
-  a Spark job.
+  a Spark job.  ``soul_bucket`` is the driver-side twin of the bucket
+  hash (Spark's ``pmod(xxhash64(soul), n)`` in pure Python), so finding
+  the bucket costs no Spark job either.
 - ``read_any`` is the generic format front-door (parquet/json/csv).
 
 **Atomic commits.**  The store is a SNAPSHOT-MANIFEST layout (Iceberg's
@@ -33,14 +37,14 @@ core idea, sized down): data files live in immutable
 ``commits/c<seq>/`` directories; ``_quads_meta.json`` is the single
 source of truth mapping each bucket (and the deferred-update pending
 set) to the commit that last wrote it.  A path without it is not a
-store: readers raise ``FileNotFoundError``.  Writers stage a whole
-commit directory first and then publish with one atomic manifest rename
-(``os.replace`` — swap for a conditional PUT on an object store), so a
-crash at ANY point leaves readers on the previous consistent snapshot:
-bucket data and the pending set can never be observed half-updated.
-Readers resolve live bucket directories through the manifest, which
-also makes point-read pruning a direct path lookup instead of a
-partition filter.
+store: readers raise ``FileNotFoundError``.  ``commit`` stages a whole
+commit directory first and then publishes with one atomic manifest
+rename (``os.replace`` — swap for a conditional PUT on an object
+store), so a crash at ANY point leaves readers on the previous
+consistent snapshot: bucket data and the pending set can never be
+observed half-updated.  Readers resolve live bucket directories through
+the manifest, which also makes point-read pruning a direct path lookup
+instead of a partition filter.
 """
 
 from __future__ import annotations
@@ -117,11 +121,41 @@ def soul_bucket(soul: str, n_buckets: int) -> int:
 
 @dataclass(frozen=True)
 class StoreSnapshot:
-    """One resolved manifest: where each bucket of the snapshot lives."""
+    """One resolved manifest: the commit ``seq`` that published it, where
+    each bucket of the snapshot lives, and its deferred-update pending
+    set."""
 
     path: str
     n_buckets: int
+    seq: int
     buckets: dict  # bucket id (str) -> live directory relative to ``path``
+    pending: str | None  # pending set directory relative to ``path``, or None
+
+    @classmethod
+    def open(cls, path: str) -> StoreSnapshot | None:
+        """The snapshot the store at ``path`` publishes now, or None when
+        the path has no manifest."""
+        m = load_manifest(path)
+        if m is None:
+            return None
+        return cls(path, m["n_buckets"], m["seq"], m["buckets"], m["pending"])
+
+    def bucket_paths(self, buckets=None) -> list[str]:
+        """Absolute live bucket directories, optionally restricted to a
+        bucket subset (the buckets an upsert reads back)."""
+        return [
+            os.path.join(self.path, rel)
+            for b, rel in sorted(self.buckets.items(), key=lambda kv: int(kv[0]))
+            if buckets is None or int(b) in buckets
+        ]
+
+    def pending_quads(self, spark: SparkSession) -> DataFrame | None:
+        """The deferred-update carry set, or None when nothing is
+        deferred.  A failure reading it propagates: swallowing it would
+        silently drop deferred updates."""
+        if not self.pending:
+            return None
+        return spark.read.schema(QUAD_SCHEMA).parquet(os.path.join(self.path, self.pending))
 
     def rows(self, soul: str, field: str | None = None) -> list[dict]:
         """The snapshot's quad rows of ``soul`` (and ``field``), read from
@@ -156,10 +190,14 @@ def publish_manifest(path: str, manifest: dict) -> None:
 
 
 def gc_unreferenced_commits(path: str, manifest: dict) -> None:
-    """Best-effort removal of commit dirs the manifest no longer
-    references.  Safe under a single writer (foreachBatch serializes
-    batches); a multi-reader deployment would keep the last K snapshots
-    instead so in-flight scans never lose files under them."""
+    """Best-effort removal of the commit dirs ``manifest`` no longer
+    references, run right after each publish.
+
+    Known defect: this deletes files that an open snapshot still reads.
+    A ``GunGraph`` or frame over ``read_quads`` of the previous snapshot
+    fails with a missing-file error after the next commit.  Keeping the
+    last snapshots, or those younger than a retention window, would
+    fix it; that is not done yet."""
     live = {c.split("/")[1] for c in manifest["buckets"].values()}
     if manifest.get("pending"):
         live.add(manifest["pending"].split("/")[1])
@@ -169,16 +207,6 @@ def gc_unreferenced_commits(path: str, manifest: dict) -> None:
     for d in os.listdir(commits_dir):
         if d not in live:
             shutil.rmtree(os.path.join(commits_dir, d), ignore_errors=True)
-
-
-def live_bucket_paths(path: str, manifest: dict, buckets=None) -> list[str]:
-    """Absolute live data directories, optionally restricted to a bucket
-    subset (point reads / bucket-local rewrite)."""
-    out = []
-    for b, rel in sorted(manifest["buckets"].items(), key=lambda kv: int(kv[0])):
-        if buckets is None or int(b) in buckets:
-            out.append(os.path.join(path, rel))
-    return out
 
 
 def bucket_ids(df: DataFrame, n_buckets: int) -> list[int]:
@@ -217,39 +245,45 @@ def write_buckets(
     return entries, pending_rel
 
 
-def write_quads(quads: DataFrame, path: str, n_buckets: int = DEFAULT_BUCKETS, mode: str = "overwrite") -> None:
-    if mode != "overwrite":
-        raise ValueError("write_quads commits whole snapshots; mode must be 'overwrite'")
-    prev = load_manifest(path)
-    seq = prev["seq"] + 1 if prev else 0
-    buckets, _ = write_buckets(bucketed(quads, n_buckets), path, f"commits/c{seq:06d}")
+def commit(
+    path: str,
+    base: StoreSnapshot | None,
+    n_buckets: int,
+    tagged: DataFrame,
+    inherited: dict[str, str],
+    pending: DataFrame | None = None,
+) -> None:
+    """The one commit protocol: stage ``tagged`` (a ``bucketed`` frame)
+    and the ``pending`` rows into a fresh ``commits/c<seq>`` directory,
+    ``seq`` one past ``base``'s (0 for a new store), then publish a
+    manifest listing the written buckets over the ``inherited`` ones,
+    then remove the commit dirs it no longer references.  Nothing a
+    reader resolves changes before the publish."""
+    seq = base.seq + 1 if base is not None else 0
+    written, pending_rel = write_buckets(tagged, path, f"commits/c{seq:06d}", pending)
     # the bucket count is part of the layout; persist it so readers can't
     # silently prune with the wrong modulus
-    manifest = {"n_buckets": n_buckets, "seq": seq, "buckets": buckets, "pending": None}
+    manifest = {"n_buckets": n_buckets, "seq": seq, "buckets": {**inherited, **written}, "pending": pending_rel}
     publish_manifest(path, manifest)
     gc_unreferenced_commits(path, manifest)
 
 
-def read_quads(spark: SparkSession, path: str, soul: str | None = None) -> DataFrame:
-    """The store's snapshot, or the rows of one ``soul``.  A whole-store
-    frame carries its ``StoreSnapshot`` as ``_store_snapshot``."""
-    manifest = load_manifest(path)
-    if manifest is None:
+def write_quads(quads: DataFrame, path: str, n_buckets: int = DEFAULT_BUCKETS) -> None:
+    """Replace the store at ``path`` (creating it if absent) with the
+    snapshot ``quads``: a commit that inherits no bucket and carries no
+    pending set."""
+    commit(path, StoreSnapshot.open(path), n_buckets, bucketed(quads, n_buckets), {})
+
+
+def read_quads(spark: SparkSession, path: str) -> DataFrame:
+    """The store's current snapshot, carrying its ``StoreSnapshot`` as
+    ``_store_snapshot``."""
+    snap = StoreSnapshot.open(path)
+    if snap is None:
         raise FileNotFoundError(f"no quads store at {path}: {MANIFEST} is missing")
-    n_buckets = manifest["n_buckets"]
-    # point read: the manifest resolves the soul's bucket to ONE live
-    # directory — pruning by path, no partition filter needed
-    buckets = None if soul is None else {soul_bucket(soul, n_buckets)}
-    paths = live_bucket_paths(path, manifest, buckets)
-    if not paths:
-        df = spark.createDataFrame([], QUAD_SCHEMA)
-    else:
-        df = spark.read.parquet(*paths)
-        if soul is not None:
-            df = df.filter(F.col("soul") == soul)
-        df = df.select(_COLUMNS)
-    if soul is None:
-        df._store_snapshot = StoreSnapshot(path, n_buckets, dict(manifest["buckets"]))
+    paths = snap.bucket_paths()
+    df = spark.read.parquet(*paths).select(_COLUMNS) if paths else spark.createDataFrame([], QUAD_SCHEMA)
+    df._store_snapshot = snap
     return df
 
 

@@ -14,18 +14,18 @@ store (sources/io.py layout) with these scale properties:
   ``soul_bucket`` and hash-partitioned on it once (``sources.io.
   bucketed``); ``ham_merge`` groups by ``(soul_bucket, soul, field)``,
   so the aggregate reuses that partitioning.  The merged buckets and the
-  new pending set go out in ONE ``partitionBy`` write
-  (``sources.io.write_buckets``): the pending rows, not merged, in the
-  ``soul_bucket=-1`` directory of the same commit.  With the distinct
-  that finds the touched buckets, a batch runs about five Spark jobs.
-- **atomic snapshot commit** (sources/io.py layout): merged buckets AND
-  the new pending set are staged into an immutable ``commits/c<seq>/``
-  directory, then published with ONE atomic manifest swap.  A crash at
-  any point leaves readers on the previous consistent snapshot; deferred
-  rows can never replay against a half-new store.  The manifest's
-  ``pending`` names the commit's ``soul_bucket=-1`` directory, or is
-  None when nothing is deferred.  The commit dir is new, so the plan
-  never overwrites what it reads.
+  new pending set go out in ONE ``partitionBy`` write.  With the
+  distinct that finds the touched buckets, a batch runs about five
+  Spark jobs.
+- **atomic snapshot commit**: this module owns only the merge plan.
+  The store's manifest and commit protocol are ``sources.io``'s: the
+  batch reads the ``StoreSnapshot`` it merges against and hands the
+  merged buckets, the inherited ones and the deferred rows to
+  ``sources.io.commit``, which stages them into a fresh commit
+  directory and publishes them with ONE atomic manifest swap.  A crash
+  at any point leaves readers on the previous consistent snapshot;
+  deferred rows can never replay against a half-new store.  The commit
+  dir is new, so the plan never overwrites what it reads.
 - **idempotent by construction**: HAM merge is associative, commutative
   and idempotent, so foreachBatch's at-least-once replay converges to
   the same store (no dedup bookkeeping; the reference needs
@@ -41,44 +41,25 @@ store (sources/io.py layout) with these scale properties:
 
 from __future__ import annotations
 
-import os
 import time
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
 from esgopeta_spark.ham import empty_quads, ham_merge, split_deferred
-from esgopeta_spark.sources.io import (
-    DEFAULT_BUCKETS,
-    bucket_ids,
-    bucketed,
-    gc_unreferenced_commits,
-    live_bucket_paths,
-    load_manifest,
-    publish_manifest,
-    write_buckets,
-)
+from esgopeta_spark.sources.io import DEFAULT_BUCKETS, StoreSnapshot, bucket_ids, bucketed, commit
 from esgopeta_spark.types import QUAD_SCHEMA
 
 _QUAD_COLS = [f.name for f in QUAD_SCHEMA.fields]
 
 
-def _pending_of(spark: SparkSession, store_path: str, manifest: dict | None) -> DataFrame | None:
-    """The deferred-update carry set ``manifest`` names, or None.  A
-    failure reading it propagates: swallowing it would silently drop
-    deferred updates."""
-    if manifest is None or not manifest["pending"]:
-        return None
-    return spark.read.schema(QUAD_SCHEMA).parquet(os.path.join(store_path, manifest["pending"]))
-
-
 def read_pending(spark: SparkSession, store_path: str) -> DataFrame:
     """The store's current deferred-update carry set (empty frame when
     the store has none), resolved through the manifest snapshot."""
-    manifest = load_manifest(store_path)
-    if manifest is None:
+    snap = StoreSnapshot.open(store_path)
+    if snap is None:
         raise FileNotFoundError(f"no quads store at {store_path}: its manifest is missing")
-    pending = _pending_of(spark, store_path, manifest)
+    pending = snap.pending_quads(spark)
     return pending if pending is not None else empty_quads(spark)
 
 
@@ -92,41 +73,33 @@ def ham_upsert_batch(
     """Merge one batch of updates (UPDATE_SCHEMA or quad-shaped rows)
     into the bucketed quads store at ``store_path``, creating the store
     if the path has none.  Callable directly (batch put) or from
-    foreachBatch (streaming put).  Stage-then-publish: nothing under the
-    live manifest changes until the final atomic swap."""
-    manifest = load_manifest(store_path)
-    if manifest is not None:
+    foreachBatch (streaming put).  Stage-then-publish through
+    ``sources.io.commit``: nothing under the live manifest changes until
+    the final atomic swap."""
+    snap = StoreSnapshot.open(store_path)
+    if snap is not None:
         # the modulus is part of the layout; an argument mismatch would
         # scatter souls across inconsistent buckets
-        n_buckets = manifest["n_buckets"]
+        n_buckets = snap.n_buckets
     if as_of_ms is None:
         as_of_ms = time.time() * 1000.0
     incoming = batch.select(*_QUAD_COLS)
     # no empty frame for a missing pending set: a local empty frame would
     # start Python workers in a job that otherwise runs none
-    pending = _pending_of(spark, store_path, manifest)
+    pending = snap.pending_quads(spark) if snap is not None else None
     if pending is not None:
         incoming = incoming.unionByName(pending)
     eligible, deferred = split_deferred(incoming, as_of_ms)
 
-    seq = manifest["seq"] + 1 if manifest is not None else 0
-    commit_rel = f"commits/c{seq:06d}"
-    buckets = dict(manifest["buckets"]) if manifest is not None else {}
-    paths = []
-    if manifest is not None:  # a new store has no old bucket to read back
-        paths = live_bucket_paths(store_path, manifest, set(bucket_ids(eligible, n_buckets)))
+    inherited = snap.buckets if snap is not None else {}
+    # a store with no bucket has none to read back, and skips the distinct
+    paths = snap.bucket_paths(set(bucket_ids(eligible, n_buckets))) if inherited else []
     candidates = eligible.unionByName(spark.read.schema(QUAD_SCHEMA).parquet(*paths)) if paths else eligible
     # one exchange: hash on soul_bucket, then merge within each bucket;
-    # stage merged buckets and the deferred rows into the NEW commit dir
-    # in one write — the plan reads old snapshots and writes fresh paths
+    # the commit stages the merged buckets and the deferred rows into a
+    # NEW commit dir in one write — the plan never overwrites what it reads
     merged = ham_merge(bucketed(candidates, n_buckets), by=("soul_bucket",))
-    written, pending_rel = write_buckets(merged, store_path, commit_rel, pending=deferred)
-    buckets.update(written)
-
-    # publish: ONE atomic manifest swap commits buckets + pending together
-    new_manifest = {"n_buckets": n_buckets, "seq": seq, "buckets": buckets, "pending": pending_rel}
-    publish_manifest(store_path, new_manifest)
-    gc_unreferenced_commits(store_path, new_manifest)
+    commit(store_path, snap, n_buckets, merged, inherited, pending=deferred)
 
 
 def stream_put(

@@ -60,6 +60,24 @@ def test_lazy_parent_creation(spark):
     assert g.node(soul_b)["c"] == {"#": soul_c}
 
 
+def test_put_leaves_the_graph_it_was_called_on_unchanged(spark):
+    """Two puts from the same graph: each creates its own parent chain,
+    because the souls the first put created belong to its new graph only,
+    and neither put changes the original graph's soul cache."""
+    g = fresh_graph(spark)
+    first = g.put(["a", "b", "c"], 1, state=1.0)
+    assert g._soul_cache == {}
+    second = g.put(["a", "b", "d"], 2, state=2.0)
+    assert g._soul_cache == {}
+    relations = [u for u in second.updates if u["soul"] == "a" and u["field"] == "b"]
+    assert len(relations) == 1 and relations[0]["value_type"] == "relation"
+    new_soul = relations[0]["value_relation"]
+    assert new_soul != first.graph.soul_of("a", "b")
+    assert second.graph.fetch_one("a", "b", "d").value == 2
+    assert second.graph.fetch_one("a", "b", "c").value_exists is False
+    assert g.fetch_one("a", "b", "c").value_exists is False
+
+
 def test_put_reuses_existing_parents(spark):
     g = fresh_graph(spark)
     g = g.put(["a", "b", "x"], 1, state=1.0).graph
@@ -258,7 +276,7 @@ def test_bulk_traverse(spark):
 
 
 def test_storage_ttl_and_tracking(spark):
-    from esgopeta_spark.storage import QuadStore, Tracking, apply_tracking, purge_expired
+    from esgopeta_spark.storage import Tracking, apply_tracking, purge_expired
 
     rows = [
         {"soul": "s", "field": "old", **encode_value(1), "state": 100.0},
@@ -280,17 +298,6 @@ def test_storage_ttl_and_tracking(spark):
     assert apply_tracking(quads, observed, Tracking.NOTHING).count() == 0
     assert apply_tracking(quads, observed, Tracking.EVERYTHING).count() == 2
 
-    store = QuadStore.create(quads, now_ms=1000.0)
-    future = spark.createDataFrame(
-        [{"soul": "s", "field": "new", **encode_value(9), "state": 5000.0}], QUAD_SCHEMA
-    )
-    store = store.merge(future)
-    assert store.deferred.count() == 1
-    snap = {r["field"]: r["value_number"] for r in store.quads.collect()}
-    assert snap["new"] == 2.0  # future not applied yet
-    store = store.advance_to(6000.0)
-    snap = {r["field"]: r["value_number"] for r in store.quads.collect()}
-    assert snap["new"] == 9.0
 
 
 def test_scoped_chain_api(spark):

@@ -23,16 +23,40 @@ def test_quads_roundtrip_and_bucket_pruning(spark, tmp_path):
     assert back.count() == 60
     assert [f.name for f in back.schema.fields] == [f.name for f in QUAD_SCHEMA.fields]
 
-    one = read_quads(spark, path, soul="s7")
-    got = {(r["field"], r["value_number"]) for r in one.collect()}
+    got = {(r["field"], r["value_number"]) for r in back._store_snapshot.rows("s7")}
     assert got == {("f0", 70.0), ("f1", 71.0), ("f2", 72.0)}
-    # pruning proof: the manifest resolves the point read to EXACTLY ONE
-    # bucket directory — stronger than a partition filter, the scan's
-    # file listing never touches the other n_buckets - 1 dirs — and the
-    # soul equality still pushes down to the parquet reader
-    plan = one._jdf.queryExecution().executedPlan().toString()
-    assert "InMemoryFileIndex(1 paths)" in plan, plan
-    assert "EqualTo(soul,s7)" in plan, plan
+
+
+def test_write_quads_over_a_store_replaces_its_snapshot(spark, tmp_path):
+    """write_quads over an existing store publishes the next seq with only
+    the new snapshot's buckets, at the same or a new bucket count, drops
+    the old pending set, and GC removes the old commit directories."""
+    import os
+
+    from esgopeta_spark.sources.io import StoreSnapshot, soul_bucket
+    from esgopeta_spark.streaming.upsert import ham_upsert_batch, read_pending
+
+    path = str(tmp_path / "store")
+
+    def quads(souls, state=1.0):
+        return spark.createDataFrame(
+            [{"soul": s, "field": "f", **encode_value(s), "state": state} for s in souls], QUAD_SCHEMA
+        )
+
+    ham_upsert_batch(spark, quads([f"s{i}" for i in range(40)]), path, n_buckets=8, as_of_ms=1e6)
+    ham_upsert_batch(spark, quads(["later"], state=2e6), path, n_buckets=8, as_of_ms=1e6)
+    before = StoreSnapshot.open(path)
+    assert before.seq == 1 and before.pending is not None and len(before.buckets) == 8
+
+    for seq, n_buckets, souls in [(2, 8, ["a", "b"]), (3, 3, ["x", "y", "z", "w"])]:
+        write_quads(quads(souls), path, n_buckets=n_buckets)
+        snap = StoreSnapshot.open(path)
+        assert (snap.seq, snap.n_buckets, snap.pending) == (seq, n_buckets, None)
+        assert set(snap.buckets) == {str(soul_bucket(s, n_buckets)) for s in souls}
+        assert all(rel.startswith(f"commits/c{seq:06d}/") for rel in snap.buckets.values())
+        assert os.listdir(os.path.join(path, "commits")) == [f"c{seq:06d}"]
+        assert read_pending(spark, path).isEmpty()
+        assert sorted(r["soul"] for r in read_quads(spark, path).collect()) == sorted(souls)
 
 
 def test_soul_bucket_matches_spark_bucket_hash(spark):

@@ -400,8 +400,8 @@ def test_upsert_crash_before_publish_leaves_consistent_snapshot(spark, tmp_path,
     are staged but before the swap — readers must still see the previous
     snapshot (buckets AND pending, never a mix), and an at-least-once
     replay of the same batch must converge to the once-applied state."""
+    from esgopeta_spark.sources import io as sources_io
     from esgopeta_spark.sources.io import read_quads
-    from esgopeta_spark.streaming import upsert
     from esgopeta_spark.streaming.upsert import ham_upsert_batch, read_pending
 
     store = str(tmp_path / "store")
@@ -421,7 +421,7 @@ def test_upsert_crash_before_publish_leaves_consistent_snapshot(spark, tmp_path,
     def exploding_publish(path, manifest):
         raise boom
 
-    monkeypatch.setattr(upsert, "publish_manifest", exploding_publish)
+    monkeypatch.setattr(sources_io, "publish_manifest", exploding_publish)
     import pytest as _pytest
 
     with _pytest.raises(RuntimeError):
@@ -452,6 +452,7 @@ def test_upsert_commit_is_one_exchange_and_one_write(spark, tmp_path, monkeypatc
     directory as the buckets."""
     import glob
 
+    from esgopeta_spark.sources import io as sources_io
     from esgopeta_spark.sources.io import load_manifest, soul_bucket
     from esgopeta_spark.streaming import upsert
 
@@ -461,13 +462,13 @@ def test_upsert_commit_is_one_exchange_and_one_write(spark, tmp_path, monkeypatc
     upsert.ham_upsert_batch(spark, spark.createDataFrame(b1, UPDATE_SCHEMA), store, n_buckets=8, as_of_ms=as_of)
 
     seen = []
-    write_buckets = upsert.write_buckets
+    write_buckets = sources_io.write_buckets
 
     def capture(tagged, *args, **kwargs):
         seen.append(tagged)
         return write_buckets(tagged, *args, **kwargs)
 
-    monkeypatch.setattr(upsert, "write_buckets", capture)
+    monkeypatch.setattr(sources_io, "write_buckets", capture)
     souls = [f"s{i}" for i in range(0, 40, 9)]
     b2 = [q(s, "f", "new", 500, msg=f"n{s}") for s in souls] + [q("s3", "g", "later", 2_000_000, msg="x")]
     upsert.ham_upsert_batch(spark, spark.createDataFrame(b2, UPDATE_SCHEMA), store, n_buckets=8, as_of_ms=as_of)
