@@ -18,9 +18,10 @@ Design split: one overlay over one base.
   overlay's rows for the key and ONE probe of ``_base`` — the
   reference's one map probe per hop (gun/storage.go).  A base read by
   ``sources.read_quads(spark, path)`` carries its ``StoreSnapshot``, and
-  the probe reads the key's one bucket on the driver with pyarrow: no
-  Spark job.  Any other base (a derived or in-memory frame) is probed
-  with a Spark ``filter(...).limit(1)``.  Path prefixes resolve through
+  the probe binary-searches the key's one bucket on the driver: no Spark
+  job, and the snapshot decodes each bucket once, so only its first
+  probe of a bucket reads a file.  Any other base (a derived or
+  in-memory frame) is probed with a Spark ``filter(...).limit(1)``.  Path prefixes resolve through
   the memoized soul cache (gun/scoped.go:44-81).  A graph built only
   from puts has no base, so its point ops run no Spark job.
 - **bulk ops** (``traverse``, ``nodes``, ``edges``): fully distributed,

@@ -25,11 +25,17 @@ and nowhere else.
   ``seq``, live bucket directories and the pending set.  A frame
   returned by ``read_quads(spark, path)`` carries the one it resolved
   (``_store_snapshot`` on that exact object; derived frames have none).
-  ``StoreSnapshot.rows`` reads one bucket's live files on the driver with
-  pyarrow and row filters — the point probe ``GunGraph`` runs instead of
-  a Spark job.  ``soul_bucket`` is the driver-side twin of the bucket
-  hash (Spark's ``pmod(xxhash64(soul), n)`` in pure Python), so finding
-  the bucket costs no Spark job either.
+  ``StoreSnapshot.rows`` is the point probe ``GunGraph`` runs instead of
+  a Spark job.  Each snapshot decodes a bucket once, on its first probe:
+  it reads the bucket's live files on the driver with pyarrow, sorts the
+  rows by soul and keeps the table, so every later probe of that bucket
+  is a binary search with no file read (the reference's one map probe,
+  gun/storage.go).  The kept tables total at most ``PROBE_CACHE_BYTES``,
+  least recently used bucket evicted first; the cache belongs to the
+  snapshot object, so a path that is rewritten never serves stale rows.
+  ``soul_bucket`` is the driver-side twin of the bucket hash (Spark's
+  ``pmod(xxhash64(soul), n)`` in pure Python), so finding the bucket
+  costs no Spark job either.
 - ``read_any`` is the generic format front-door (parquet/json/csv).
 
 **Atomic commits.**  The store is a SNAPSHOT-MANIFEST layout (Iceberg's
@@ -49,12 +55,19 @@ instead of a partition filter.
 
 from __future__ import annotations
 
+import bisect
+import contextlib
 import json
+import operator
 import os
 import shutil
 import struct
-from dataclasses import dataclass
+import tempfile
+import threading
+from collections import OrderedDict
+from dataclasses import dataclass, field as dc_field
 
+import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -64,7 +77,9 @@ from esgopeta_spark.types import QUAD_SCHEMA
 DEFAULT_BUCKETS = 64
 MANIFEST = "_quads_meta.json"
 PENDING_BUCKET = -1  # the partition value of a commit's pending set
+PROBE_CACHE_BYTES = 64 << 20  # decoded bucket bytes one StoreSnapshot keeps
 _COLUMNS = [f.name for f in QUAD_SCHEMA.fields]
+_as_py = operator.methodcaller("as_py")
 
 
 def _bucket_expr(n_buckets: int):
@@ -130,6 +145,11 @@ class StoreSnapshot:
     seq: int
     buckets: dict  # bucket id (str) -> live directory relative to ``path``
     pending: str | None  # pending set directory relative to ``path``, or None
+    # bucket id -> its decoded rows sorted by soul, least recently used
+    # first; it lives and dies with this object, never keyed by path,
+    # because a path can be removed and rewritten under the same names
+    _decoded: OrderedDict = dc_field(default_factory=OrderedDict, init=False, repr=False, compare=False)
+    _lock: threading.Lock = dc_field(default_factory=threading.Lock, init=False, repr=False, compare=False)
 
     @classmethod
     def open(cls, path: str) -> StoreSnapshot | None:
@@ -158,14 +178,53 @@ class StoreSnapshot:
         return spark.read.schema(QUAD_SCHEMA).parquet(os.path.join(self.path, self.pending))
 
     def rows(self, soul: str, field: str | None = None) -> list[dict]:
-        """The snapshot's quad rows of ``soul`` (and ``field``), read from
-        the one bucket the soul hashes to with pyarrow row filters — no
-        Spark job.  A bucket the manifest does not list holds no rows."""
-        rel = self.buckets.get(str(soul_bucket(soul, self.n_buckets)))
-        if rel is None:
+        """The snapshot's quad rows of ``soul`` (and ``field``): a binary
+        search of the soul's bucket, decoded and sorted by soul on its
+        first probe in this snapshot — no Spark job, and after that first
+        probe no file read.  Only the matching rows become dicts.  A
+        bucket the manifest does not list holds no rows."""
+        bucket = str(soul_bucket(soul, self.n_buckets))
+        if bucket not in self.buckets:
             return []
-        filters = [("soul", "==", soul)] + ([] if field is None else [("field", "==", field)])
-        return pq.read_table(os.path.join(self.path, rel), columns=_COLUMNS, filters=filters).to_pylist()
+        table = self._sorted_bucket(bucket)
+        souls, fields, cols = table.column("soul"), table.column("field"), table.columns
+        # Arrow sorts strings by their UTF-8 bytes, which is Python's code
+        # point order (QUAD_SCHEMA's soul holds no null)
+        lo = bisect.bisect_left(souls, soul, key=_as_py)
+        hi = bisect.bisect_right(souls, soul, lo, key=_as_py)
+        return [
+            {name: col[i].as_py() for name, col in zip(_COLUMNS, cols)}
+            for i in range(lo, hi)
+            if field is None or fields[i].as_py() == field
+        ]
+
+    def _sorted_bucket(self, bucket: str) -> pa.Table:
+        """``bucket``'s live rows sorted by soul, in one chunk: decoded on
+        first use, then kept, least recently used evicted first, while the
+        kept tables total at most ``PROBE_CACHE_BYTES``."""
+        with self._lock:
+            table = self._decoded.get(bucket)
+            if table is not None:
+                self._decoded.move_to_end(bucket)
+                return table
+            # one ParquetFile read per data file: half the cost of a
+            # pq.read_table of the directory, which builds a dataset
+            bucket_dir, parts = os.path.join(self.path, self.buckets[bucket]), []
+            for name in sorted(os.listdir(bucket_dir)):
+                if not name.startswith((".", "_")):  # checksum and marker files
+                    with pq.ParquetFile(os.path.join(bucket_dir, name)) as f:
+                        parts.append(f.read(columns=_COLUMNS))
+            table = self._decoded[bucket] = pa.concat_tables(parts).sort_by("soul").combine_chunks()
+            kept = sum(t.nbytes for t in self._decoded.values())
+            while kept > PROBE_CACHE_BYTES:
+                kept -= self._decoded.popitem(last=False)[1].nbytes
+            return table
+
+    @property
+    def cached_bytes(self) -> int:
+        """Arrow bytes of the buckets this snapshot keeps decoded."""
+        with self._lock:
+            return sum(t.nbytes for t in self._decoded.values())
 
 
 def load_manifest(path: str) -> dict | None:
@@ -180,13 +239,21 @@ def load_manifest(path: str) -> dict | None:
 def publish_manifest(path: str, manifest: dict) -> None:
     """Atomically swap the manifest in — the store's only commit point.
     POSIX rename is atomic; an object-store deployment swaps this for a
-    conditional PUT (if-match on the previous manifest etag)."""
-    tmp = os.path.join(path, MANIFEST + ".tmp")
-    with open(tmp, "w") as f:
-        json.dump(manifest, f)
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp, os.path.join(path, MANIFEST))
+    conditional PUT (if-match on the previous manifest etag).  Each call
+    writes its own temp file, so two writers in flight never rename each
+    other's half-written JSON into place; a failed publish removes it."""
+    fd, tmp = tempfile.mkstemp(prefix=MANIFEST + ".", suffix=".tmp", dir=path)
+    try:
+        with open(fd, "w") as f:
+            os.fchmod(fd, 0o644)  # mkstemp's 0600 would hide the manifest from other readers
+            json.dump(manifest, f)
+            f.flush()
+            os.fsync(f.fileno())
+        os.replace(tmp, os.path.join(path, MANIFEST))
+    except BaseException:
+        with contextlib.suppress(FileNotFoundError):
+            os.remove(tmp)
+        raise
 
 
 def gc_unreferenced_commits(path: str, manifest: dict) -> None:
@@ -195,9 +262,11 @@ def gc_unreferenced_commits(path: str, manifest: dict) -> None:
 
     Known defect: this deletes files that an open snapshot still reads.
     A ``GunGraph`` or frame over ``read_quads`` of the previous snapshot
-    fails with a missing-file error after the next commit.  Keeping the
-    last snapshots, or those younger than a retention window, would
-    fix it; that is not done yet."""
+    fails with a missing-file error after the next commit: its bulk reads
+    and its point probes of buckets it has not decoded yet (the buckets
+    it already decoded keep answering).  Keeping the last snapshots, or
+    those younger than a retention window, would fix it; that is not
+    done yet."""
     live = {c.split("/")[1] for c in manifest["buckets"].values()}
     if manifest.get("pending"):
         live.add(manifest["pending"].split("/")[1])

@@ -2,10 +2,25 @@
 
 from __future__ import annotations
 
+import os
+import random
+import shutil
+import sys
+import tempfile
+import threading
+from unittest import mock
+
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pytest
+from hypothesis import example, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from esgopeta_spark.session import read_table
+from esgopeta_spark.sources import io as sources_io
 from esgopeta_spark.sources import read_any, read_quads, write_quads
+from esgopeta_spark.sources.io import MANIFEST, StoreSnapshot, load_manifest, publish_manifest, soul_bucket
 from esgopeta_spark.types import QUAD_SCHEMA, encode_value
 
 
@@ -78,6 +93,259 @@ def test_soul_bucket_matches_spark_bucket_hash(spark):
     assert len(got) == len(souls)
     for r in got:
         assert [r[f"b{n}"] for n in ns] == [soul_bucket(r["soul"], n) for n in ns], r["soul"]
+
+
+# ---------------------------------------------------------------------------
+# the snapshot point probe: StoreSnapshot.rows and its per-snapshot cache
+# ---------------------------------------------------------------------------
+
+_ARROW_TYPES = {"string": pa.string(), "double": pa.float64(), "boolean": pa.bool_()}
+_ARROW_QUADS = pa.schema([(f.name, _ARROW_TYPES[f.dataType.typeName()]) for f in QUAD_SCHEMA.fields])
+
+
+def _pyarrow_store(path, rows, n_buckets, unlisted=None):
+    """A one-commit manifest store written with pyarrow instead of Spark:
+    each bucket's rows, in the order given, split over two parquet files.
+    Bucket ``unlisted`` is written but left out of the manifest."""
+    by_bucket = {}
+    for r in rows:
+        by_bucket.setdefault(soul_bucket(r["soul"], n_buckets), []).append(r)
+    os.makedirs(path)
+    listed = {}
+    for b, rs in by_bucket.items():
+        rel = f"commits/c000000/data/soul_bucket={b}"
+        os.makedirs(os.path.join(path, rel))
+        for k, part in enumerate([rs[: len(rs) // 2], rs[len(rs) // 2 :]]):
+            if part:
+                pq.write_table(pa.Table.from_pylist(part, schema=_ARROW_QUADS), os.path.join(path, rel, f"part-{k}.parquet"))
+        if b != unlisted:
+            listed[str(b)] = rel
+    publish_manifest(path, {"n_buckets": n_buckets, "seq": 0, "buckets": listed, "pending": None})
+
+
+def _canon(rows):
+    return sorted((tuple(r[c] for c in _ARROW_QUADS.names) for r in rows), key=repr)
+
+
+_souls = st.text(min_size=1, max_size=5)  # any code point, so non-ASCII too
+_FIELDS = ["a", "b", "ü"]
+_quads = st.lists(
+    st.builds(
+        lambda s, f, v, t: {"soul": s, "field": f, **encode_value(v), "state": t},
+        _souls,
+        st.sampled_from(_FIELDS),
+        st.one_of(st.none(), st.booleans(), st.integers(-(10**20), 10**20), st.text(max_size=4), st.builds(lambda s: {"#": s}, _souls)),
+        st.floats(0, 100),
+    ),
+    max_size=40,
+)
+
+
+@example(rows=[], n_buckets=1, extra=["x"], drop=False)
+@settings(max_examples=60, deadline=None)
+@given(rows=_quads, n_buckets=st.integers(1, 8), extra=st.lists(_souls, max_size=5), drop=st.booleans())
+def test_store_probe_equals_a_selection_of_the_rows_written(rows, n_buckets, extra, drop):
+    """rows(soul) and rows(soul, field), cold and then warm, equal a
+    pure-Python selection of the rows written: for every written soul and
+    field, absent souls and fields, the souls of a bucket the manifest does
+    not list, and an empty store.  A warm probe reads no file."""
+    unlisted = soul_bucket(rows[0]["soul"], n_buckets) if drop and rows else None
+    probes = [(s, f) for s in sorted({r["soul"] for r in rows} | set(extra)) for f in [None, *_FIELDS, "absent"]]
+
+    def want(soul, field):
+        if soul_bucket(soul, n_buckets) == unlisted:
+            return []
+        return _canon(r for r in rows if r["soul"] == soul and (field is None or r["field"] == field))
+
+    with tempfile.TemporaryDirectory() as d:
+        path = os.path.join(d, "store")
+        _pyarrow_store(path, rows, n_buckets, unlisted)
+        snap = StoreSnapshot.open(path)
+        for soul, field in probes:
+            assert _canon(snap.rows(soul, field)) == want(soul, field), (soul, field)
+
+        shutil.rmtree(path)  # a warm probe reads no file
+        for soul, field in probes:
+            assert _canon(snap.rows(soul, field)) == want(soul, field), (soul, field)
+
+
+def test_snapshot_cache_is_scoped_to_its_snapshot(spark, tmp_path):
+    """A fresh read_quads serves only the new rows after write_quads over
+    the path, after ham_upsert_batch, and after rmtree plus a rewrite that
+    reuses the same commit directory names; a snapshot's already-cached
+    bucket keeps answering with that snapshot's value."""
+    from esgopeta_spark.streaming.upsert import ham_upsert_batch
+
+    path = str(tmp_path / "store")
+
+    def quads(value, souls, state=1.0):
+        return spark.createDataFrame(
+            [{"soul": s, "field": "f", **encode_value(value), "state": state} for s in souls], QUAD_SCHEMA
+        )
+
+    def snapshot():
+        return read_quads(spark, path)._store_snapshot
+
+    def value(snap, soul):
+        return [r["value_string"] for r in snap.rows(soul, "f")]
+
+    write_quads(quads("v0", ["a", "b"]), path, n_buckets=4)
+    first = snapshot()
+    assert value(first, "a") == ["v0"] and value(first, "b") == ["v0"]
+
+    write_quads(quads("v1", ["a", "c"]), path, n_buckets=4)
+    second = snapshot()
+    assert (value(second, "a"), value(second, "b"), value(second, "c")) == (["v1"], [], ["v1"])
+    assert value(second, "c") == ["v1"]
+
+    ham_upsert_batch(spark, quads("v2", ["a"], state=2.0), path, n_buckets=4, as_of_ms=1e6)
+    third = snapshot()
+    assert (value(third, "a"), value(third, "c")) == (["v2"], ["v1"])
+
+    shutil.rmtree(path)
+    write_quads(quads("v3", ["a"]), path, n_buckets=4)
+    fourth = snapshot()
+    bucket = str(soul_bucket("a", 4))
+    assert fourth.seq == first.seq and fourth.buckets[bucket] == first.buckets[bucket]
+    assert (value(fourth, "a"), value(fourth, "b"), value(fourth, "c")) == (["v3"], [], [])
+
+    # the buckets each old snapshot cached still answer with its own rows
+    assert (value(first, "a"), value(first, "b")) == (["v0"], ["v0"])
+    assert (value(second, "a"), value(second, "c")) == (["v1"], ["v1"])
+    assert value(third, "a") == ["v2"]
+
+
+def _capped_store(tmp_path, monkeypatch, buckets_kept):
+    """An 8-bucket store, each soul's rows, and the byte cap, set to
+    ``buckets_kept`` times the decoded size of one bucket."""
+    rows = [{"soul": f"s{i}", "field": f, **encode_value(i), "state": 1.0} for i in range(300) for f in _FIELDS]
+    path = str(tmp_path / "store")
+    _pyarrow_store(path, rows, 8)
+    one = StoreSnapshot.open(path)
+    one.rows("s0")
+    cap = int(one.cached_bytes * buckets_kept)
+    monkeypatch.setattr(sources_io, "PROBE_CACHE_BYTES", cap)
+    return path, {s: _canon(r for r in rows if r["soul"] == s) for s in {r["soul"] for r in rows}}, cap
+
+
+@pytest.mark.parametrize("buckets_kept", [2.5, 0.5])
+def test_snapshot_cache_stays_under_its_byte_cap(tmp_path, monkeypatch, buckets_kept):
+    """With the cap at 2.5 buckets, or below one, the cached bytes never
+    exceed it, buckets are evicted and read again, and every answer is
+    right."""
+    path, want, cap = _capped_store(tmp_path, monkeypatch, buckets_kept)
+    reads = []
+    parquet_file = sources_io.pq.ParquetFile
+    monkeypatch.setattr(sources_io.pq, "ParquetFile", lambda *a, **k: reads.append(a) or parquet_file(*a, **k))
+
+    snap = StoreSnapshot.open(path)
+    for soul in random.Random(0).choices(sorted(want), k=200):
+        assert _canon(snap.rows(soul)) == want[soul]
+        assert snap.cached_bytes <= cap
+    assert len(reads) > 2 * 8  # a bucket was evicted and read again (two files a bucket)
+
+
+def test_snapshot_probe_is_safe_under_concurrent_callers(tmp_path, monkeypatch):
+    """Eight threads probe one snapshot whose cap keeps about two buckets,
+    so they evict and decode under each other: every answer is right and
+    the cap holds."""
+    path, want, cap = _capped_store(tmp_path, monkeypatch, 2.5)
+    snap, errors = StoreSnapshot.open(path), []
+
+    def probe(seed):
+        try:
+            for soul in random.Random(seed).choices(sorted(want), k=100):
+                assert _canon(snap.rows(soul)) == want[soul]
+                assert snap.cached_bytes <= cap
+        except Exception as e:  # reported by the main thread
+            errors.append(e)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=probe, args=(k,)) for k in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads) and errors == []
+
+
+# ---------------------------------------------------------------------------
+# manifest publish
+# ---------------------------------------------------------------------------
+
+
+def test_stale_manifest_temp_file_is_neither_published_nor_blocking(spark, tmp_path):
+    """Temp files a crashed writer left behind, under the old fixed name
+    or a unique one, are never published and do not stop the next
+    commit; a publish that fails removes its own temp file."""
+    path = str(tmp_path / "store")
+
+    def quads(souls):
+        return spark.createDataFrame([{"soul": s, "field": "f", **encode_value(s), "state": 1.0} for s in souls], QUAD_SCHEMA)
+
+    write_quads(quads(["a"]), path, n_buckets=2)
+    stale = {name: '{"n_buckets": 2, "seq": 9, "buck' for name in [MANIFEST + ".tmp", MANIFEST + ".crashed.tmp"]}
+    for name, text in stale.items():
+        with open(os.path.join(path, name), "w") as f:
+            f.write(text)
+
+    write_quads(quads(["b", "c"]), path, n_buckets=2)
+    assert StoreSnapshot.open(path).seq == 1
+    assert sorted(r["soul"] for r in read_quads(spark, path).collect()) == ["b", "c"]
+    for name, text in stale.items():
+        with open(os.path.join(path, name)) as f:
+            assert f.read() == text
+
+    with mock.patch.object(sources_io.os, "replace", side_effect=OSError("disk gone")), pytest.raises(OSError):
+        publish_manifest(path, {"n_buckets": 2, "seq": 2, "buckets": {}, "pending": None})
+    assert sorted(n for n in os.listdir(path) if n.endswith(".tmp")) == sorted(stale)
+    assert StoreSnapshot.open(path).seq == 1
+
+
+def test_concurrent_publishes_never_share_a_temp_file(tmp_path):
+    """Every publish writes its own temp file in the store directory, so
+    eight writers publishing at once each rename a whole manifest: none
+    fails, every manifest a reader sees is complete JSON, and no temp file
+    is left."""
+    path = str(tmp_path)
+    temps, seen, errors = [], [], []
+    replace = os.replace
+
+    def recording_replace(src, dst):
+        temps.append(src)
+        replace(src, dst)
+
+    def writer(k):
+        try:
+            for i in range(25):
+                publish_manifest(path, {"writer": k, "i": i, "pad": "x" * 4096})
+        except Exception as e:  # reported by the main thread
+            errors.append(e)
+
+    def reader():
+        try:
+            while any(t.is_alive() for t in writers):
+                seen.append(load_manifest(path))
+        except Exception as e:
+            errors.append(e)
+
+    writers = [threading.Thread(target=writer, args=(k,)) for k in range(8)]
+    with mock.patch.object(sources_io.os, "replace", recording_replace):
+        for t in writers:
+            t.start()
+        watcher = threading.Thread(target=reader)
+        watcher.start()
+        for t in [*writers, watcher]:
+            t.join(timeout=60)
+    assert not any(t.is_alive() for t in [*writers, watcher]) and errors == []
+    assert len(temps) == len(set(temps)) == 200
+    assert all(os.path.dirname(t) == path for t in temps)
+    assert all(m is None or (set(m) == {"writer", "i", "pad"} and len(m["pad"]) == 4096) for m in seen)
+    assert [n for n in os.listdir(path) if n.endswith(".tmp")] == []
 
 
 def test_read_any_formats(spark, tmp_path):
