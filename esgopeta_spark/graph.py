@@ -24,10 +24,14 @@ Design split: one overlay over one base.
   in-memory frame) is probed with a Spark ``filter(...).limit(1)``.  Path prefixes resolve through
   the memoized soul cache (gun/scoped.go:44-81).  A graph built only
   from puts has no base, so its point ops run no Spark job.
-- **bulk ops** (``traverse``, ``nodes``, ``edges``): fully distributed,
-  expressed as iterated equi-joins on ``quads`` — ``_base`` itself, or
-  ONE ``ham_merge`` of ``_base`` and the overlay.  The GraphX-style
-  analytics subset; no collect anywhere.
+- **bulk ops** (``traverse``, ``values_at``, ``edges``): fully
+  distributed, expressed as iterated equi-joins on ``quads`` — ``_base``
+  itself, or ONE ``ham_merge`` of ``_base`` and the overlay.  The
+  relation slice is one edge view per graph (``edges``), materialized
+  by the first job that reads it: every later traverse hop and
+  ``pagerank(g.edges())`` reuse its blocks instead of scanning and
+  decoding the store again.  The GraphX-style analytics subset; no
+  collect anywhere.
 """
 
 from __future__ import annotations
@@ -38,10 +42,9 @@ from typing import Any, Iterable, Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from esgopeta_spark.ham import empty_quads, ham_merge
+from esgopeta_spark.ham import empty_quads, ham_merge, quads_frame
 from esgopeta_spark.soul import SoulGen
 from esgopeta_spark.types import (
-    QUAD_SCHEMA,
     VALUE_COLUMNS,
     VALUE_RELATION,
     decode_value,
@@ -98,6 +101,7 @@ class GunGraph:
         self._snapshot = getattr(quads, "_store_snapshot", None)
         self._pending: list[dict] = []  # the overlay: put rows not in _base
         self._merged: DataFrame | None = None  # cached quads of a non-empty overlay
+        self._edges: DataFrame | None = None  # cached edges(), built on first use
         self.soul_gen = soul_gen or SoulGen()
         self._soul_cache: dict[tuple[str, ...], str] = {}
 
@@ -109,7 +113,7 @@ class GunGraph:
         if not self._pending:
             return self._base if self._base is not None else empty_quads(self.spark)
         if self._merged is None:
-            overlay = self.spark.createDataFrame(self._pending, QUAD_SCHEMA)
+            overlay = quads_frame(self.spark, self._pending)
             self._merged = ham_merge(overlay if self._base is None else self._base.unionByName(overlay))
         return self._merged
 
@@ -120,7 +124,7 @@ class GunGraph:
     @classmethod
     def from_rows(cls, spark: SparkSession, rows: Iterable[dict], **kw) -> "GunGraph":
         """Snapshot graph of driver-side quad rows, HAM-folded on the driver."""
-        return cls(spark, spark.createDataFrame(list(_ham_fold(rows).values()), QUAD_SCHEMA), **kw)
+        return cls(spark, quads_frame(spark, _ham_fold(rows).values()), **kw)
 
     # ------------------------------------------------------------------
     # point reads (reference A1-A5)
@@ -247,12 +251,29 @@ class GunGraph:
     # ------------------------------------------------------------------
 
     def edges(self) -> DataFrame:
-        """GraphX-style edge list: (src, attr, dst) = relation quads."""
-        return self.quads.filter(F.col("value_type") == VALUE_RELATION).select(
-            F.col("soul").alias("src"),
-            F.col("field").alias("attr"),
-            F.col("value_relation").alias("dst"),
-        )
+        """GraphX-style edge list: (src, attr, dst) = relation quads.
+
+        One view per graph, like GraphX's edge partitions: a lazy
+        ``localCheckpoint``, so the first job that reads it keeps its
+        blocks and every later traverse hop or pagerank reads them, not
+        the store.  Over a scan (a store snapshot) building the view
+        runs no job, so a graph used once runs no extra one; over a put
+        overlay, building it runs the overlay's HAM merge once (AQE
+        materializes shuffle stages when the checkpoint is set up).
+        The graph is immutable (``put`` returns a new one), so the view
+        never goes stale; its blocks are freed with it, where
+        ``persist()`` would pin them for the session."""
+        if self._edges is None:
+            self._edges = (
+                self.quads.filter(F.col("value_type") == VALUE_RELATION)
+                .select(
+                    F.col("soul").alias("src"),
+                    F.col("field").alias("attr"),
+                    F.col("value_relation").alias("dst"),
+                )
+                .localCheckpoint(eager=False)
+            )
+        return self._edges
 
     def traverse(self, roots: DataFrame, *fields: str) -> DataFrame:
         """Bulk multi-hop traversal: for every row in ``roots`` (column

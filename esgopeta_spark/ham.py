@@ -221,8 +221,20 @@ def field_history(updates: DataFrame) -> DataFrame:
         F.lead(F.col("state").cast("bigint")).over(w).alias("valid_to_ms"),
     )
 
+
+def quads_frame(spark, rows) -> DataFrame:
+    """Quad rows (dicts; absent value columns are null) as a frame of
+    ``QUAD_SCHEMA``, built through Arrow: a ``LocalTableScan`` that runs
+    no Python task, where ``createDataFrame(rows, QUAD_SCHEMA)`` scans a
+    Python RDD."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    return spark.createDataFrame(pa.Table.from_pylist(list(rows), schema=to_arrow_schema(QUAD_SCHEMA)))
+
+
 def empty_quads(spark) -> DataFrame:
-    return spark.createDataFrame([], QUAD_SCHEMA)
+    return quads_frame(spark, [])
 
 
 __all__ = [
@@ -232,6 +244,7 @@ __all__ = [
     "split_deferred",
     "value_json_col",
     "empty_quads",
+    "quads_frame",
     "ApplyResult",
     "NEVER_SEEN_UPDATE",
     "TOO_FUTURE_DEFERRED",

@@ -16,6 +16,19 @@ write, about 7 ms each.  The replacement keeps the checksum layer and
 sets the same mode bits through ``java.nio``.  Streaming checkpoints are
 written through ``FileContext`` (``LocalFs``), which builds its own raw
 filesystem, so they still fork.
+
+Python workers are forked by ``esgopeta_spark._worker_daemon``
+(``spark.python.daemon.module``) instead of ``pyspark.daemon``.  Before
+each task PySpark calls ``importlib.invalidate_caches()``, and on
+CPython < 3.13 every zip importer then re-reads its archive's directory:
+16 reads of ``pyspark.zip``/py4j, about 26,700 entries, per task, which
+about doubles the time of a small Python job.  The daemon re-reads an
+archive only when its file has changed.  Spark starts it with
+``python -m``, so the package root must be on the workers' path:
+``get_spark`` appends it to the executor ``PYTHONPATH``
+(``spark.executorEnv.PYTHONPATH``), after whatever the caller set there.
+Delete the module and these two settings once workers run CPython >=
+3.13, whose ``zipimporter.invalidate_caches`` only drops the cache.
 """
 
 from __future__ import annotations
@@ -27,6 +40,8 @@ from pyspark.sql import SparkSession
 
 NIO_FS_JAR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "jvm", "nio-localfs.jar")
 NIO_FS_CLASS = "esgopeta_spark.jvm.NioLocalFileSystem"
+PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+WORKER_DAEMON = "esgopeta_spark._worker_daemon"
 
 
 def get_spark(app_name: str = "esgopeta-spark", shuffle_partitions: int | None = None) -> SparkSession:
@@ -54,8 +69,16 @@ def get_spark(app_name: str = "esgopeta-spark", shuffle_partitions: int | None =
         .config("spark.ui.enabled", "false")
         .config("spark.driver.extraClassPath", NIO_FS_JAR)
         .config("spark.hadoop.fs.file.impl", NIO_FS_CLASS)
+        .config("spark.python.daemon.module", WORKER_DAEMON)
     )
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    # the context copied spark.executorEnv.* into the environment every
+    # Python function ships with; append the package root, keep the rest
+    env = spark.sparkContext.environment
+    paths = [p for p in env.get("PYTHONPATH", "").split(os.pathsep) if p]
+    if PACKAGE_ROOT not in paths:
+        env["PYTHONPATH"] = os.pathsep.join(paths + [PACKAGE_ROOT])
+    return spark
 
 
 def table_path(sf_dir: str, name: str) -> str:

@@ -72,6 +72,7 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from esgopeta_spark.ham import empty_quads
 from esgopeta_spark.types import QUAD_SCHEMA
 
 DEFAULT_BUCKETS = 64
@@ -351,7 +352,7 @@ def read_quads(spark: SparkSession, path: str) -> DataFrame:
     if snap is None:
         raise FileNotFoundError(f"no quads store at {path}: {MANIFEST} is missing")
     paths = snap.bucket_paths()
-    df = spark.read.parquet(*paths).select(_COLUMNS) if paths else spark.createDataFrame([], QUAD_SCHEMA)
+    df = spark.read.parquet(*paths).select(_COLUMNS) if paths else empty_quads(spark)
     df._store_snapshot = snap
     return df
 

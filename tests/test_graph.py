@@ -275,6 +275,45 @@ def test_bulk_traverse(spark):
     assert {r["uid"]: r["value_string"] for r in named} == {i: f"name-{i}" for i in range(10)}
 
 
+def _friends_graph(spark, tmp_path):
+    """A store graph where ``u{i}.friend`` relates to ``u{i+1}``."""
+    rows = [{"soul": f"u{i}", "field": "friend", **encode_value({"#": f"u{i + 1}"}), "state": 1.0} for i in range(5)]
+    rows += [{"soul": "users", "field": f"u{i}", **encode_value({"#": f"u{i}"}), "state": 1.0} for i in range(6)]
+    return GunGraph(spark, _store_base(spark, tmp_path, rows), soul_gen=SoulGen(seed=7))
+
+
+def test_second_traverse_reads_the_edge_view_not_the_store(spark, tmp_path):
+    """The first traverse materializes the graph's one edge view; a second
+    traverse runs its hops from those blocks, so it still answers once the
+    store's files are gone."""
+    import shutil
+
+    g = _friends_graph(spark, tmp_path)
+    roots = spark.createDataFrame([("u0", 0), ("u2", 2)], "soul string, root int")
+
+    def two_hops():
+        return sorted((r["root"], r["soul"]) for r in g.traverse(roots, "friend", "friend").collect())
+
+    assert two_hops() == [(0, "u2"), (2, "u4")]
+    assert g.edges() is g.edges()
+    shutil.rmtree(tmp_path / "store")
+    assert two_hops() == [(0, "u2"), (2, "u4")]
+
+
+def test_put_derived_graph_has_its_own_edge_view(spark, tmp_path):
+    """``put`` returns a graph whose edges include the new relation; the
+    graph it was called on keeps its view without it."""
+    g = _friends_graph(spark, tmp_path)
+    roots = spark.createDataFrame([("u5",)], "soul string")
+    assert g.traverse(roots, "friend").collect() == []  # materializes g's view
+    g2 = g.put(["users", "u5", "friend"], {"#": "u0"}, state=2.0).graph
+    assert [r["soul"] for r in g2.traverse(roots, "friend").collect()] == ["u0"]
+    assert g.traverse(roots, "friend").collect() == []
+    new_edge = ("u5", "friend", "u0")
+    assert new_edge in {tuple(r) for r in g2.edges().collect()}
+    assert new_edge not in {tuple(r) for r in g.edges().collect()}
+
+
 def test_storage_ttl_and_tracking(spark):
     from esgopeta_spark.storage import Tracking, apply_tracking, purge_expired
 

@@ -28,6 +28,7 @@ from esgopeta_spark.ham import (
     ham_apply_updates,
     ham_merge,
     empty_quads,
+    quads_frame,
 )
 from esgopeta_spark.types import QUAD_SCHEMA, encode_value, decode_value
 
@@ -326,3 +327,19 @@ def test_field_history_carries_nonnumeric_payloads(spark):
     # every row still exposes the full VALUE_COLUMNS surface
     assert {"value_type", "value_number_raw", "value_number", "value_string",
             "value_bool", "value_relation"} <= set(hist[0].asDict())
+
+
+def test_quads_frame_matches_python_rdd_frame(spark):
+    """``quads_frame`` returns the rows ``createDataFrame(rows,
+    QUAD_SCHEMA)`` returns (nulls, relations, big numbers, non-ASCII
+    souls, absent value columns) from a local Arrow scan, not a Python RDD."""
+    values = [None, 7, 2.5, 10**20, "ünï", True, {"#": "日本"}]
+    rows = [{"soul": soul, "field": f"f{i}", **encode_value(v), "state": float(i)}
+            for i, (soul, v) in enumerate(zip(["s", "sé", "日本", "s", "sé", "日本", "s"], values))]
+    rows.append({"soul": "s", "field": "sparse", "value_type": "null", "state": 9.0})
+    for got, want in [(quads_frame(spark, rows), spark.createDataFrame(rows, QUAD_SCHEMA)),
+                      (empty_quads(spark), spark.createDataFrame([], QUAD_SCHEMA))]:
+        assert got.schema == want.schema == QUAD_SCHEMA
+        assert sorted(got.collect()) == sorted(want.collect())
+        plan = got._jdf.queryExecution().executedPlan().toString()
+        assert "LocalTableScan" in plan and "ExistingRDD" not in plan
