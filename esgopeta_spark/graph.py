@@ -281,8 +281,8 @@ class GunGraph:
         slice.  Returns roots' columns plus ``soul`` rebound to the target.
 
         Each hop is one equi-join on the relation slice; Catalyst picks
-        broadcast when the edge slice is small, sort-merge otherwise.  At
-        100 TB, quads bucketed by soul make these co-located joins.
+        broadcast when the edge slice is small, sort-merge otherwise; the
+        store's soul buckets do not co-locate them, so sort-merge shuffles.
         """
         cur = roots
         edges = self.edges()

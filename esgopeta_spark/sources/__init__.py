@@ -1,7 +1,6 @@
 from esgopeta_spark.sources.io import (
-    read_any,
     read_quads,
     write_quads,
 )
 
-__all__ = ["read_any", "read_quads", "write_quads"]
+__all__ = ["read_quads", "write_quads"]

@@ -1,4 +1,4 @@
-"""Sources & sinks (SURVEY.md §2 E1 + the quads persistence contract).
+"""Sources & sinks (SURVEY.md §2 E1): the quads store.
 
 The reference keeps everything in one in-memory map behind one
 ``Storage`` type (gun/storage.go).  Our durable layout is parquet with
@@ -7,15 +7,16 @@ manifest format, the commit naming and the commit protocol live here
 and nowhere else.
 
 - ``write_buckets`` is the one commit write: rows tagged by ``bucketed``
-  with ``soul_bucket = hash(soul) % n_buckets`` and hash-partitioned on
+  with ``soul_bucket = crc32(soul) % n_buckets`` and hash-partitioned on
   it go out in one ``partitionBy`` job, one directory (and one file) per
-  bucket, so (a) path-traversal joins on soul co-locate by partition,
-  (b) point reads prune to one bucket directory, (c) the HAM merge
-  needs no second shuffle when it groups by the bucket too.  The same
-  job writes a commit's deferred-update pending set, unmerged, into the
-  ``soul_bucket=-1`` directory, a value no bucket takes.  (Hive-style
-  bucketed tables would use the metastore; a plain-directory layout
-  keeps the same join locality via partition pruning without one.)
+  bucket.  The layout buys (a) point probes that read one bucket,
+  (b) upserts that rewrite only the buckets a batch touches, and (c) a
+  HAM merge that groups by the bucket too, so it reuses the commit's one
+  exchange.  It does not co-locate joins: ``read_quads`` reads plain
+  leaf directories with no bucketing spec, so a traversal join on soul
+  shuffles like any other.  The same job writes a commit's
+  deferred-update pending set, unmerged, into the ``soul_bucket=-1``
+  directory, a value no bucket takes.
 - ``commit`` is the one commit protocol, and both writers use it:
   ``write_quads`` replaces the whole snapshot (no inherited bucket, no
   pending set), and ``streaming.upsert.ham_upsert_batch`` rewrites the
@@ -33,19 +34,22 @@ and nowhere else.
   gun/storage.go).  The kept tables total at most ``PROBE_CACHE_BYTES``,
   least recently used bucket evicted first; the cache belongs to the
   snapshot object, so a path that is rewritten never serves stale rows.
-  ``soul_bucket`` is the driver-side twin of the bucket hash (Spark's
-  ``pmod(xxhash64(soul), n)`` in pure Python), so finding the bucket
-  costs no Spark job either.
-- ``read_any`` is the generic format front-door (parquet/json/csv).
+  ``soul_bucket`` is the same bucket hash on the driver (Spark and
+  ``zlib`` both ship CRC-32), so finding the bucket costs no Spark job
+  either.
+- ``compaction_plan`` plans small-file compaction over a file listing.
 
 **Atomic commits.**  The store is a SNAPSHOT-MANIFEST layout (Iceberg's
 core idea, sized down): data files live in immutable
 ``commits/c<seq>/`` directories; ``_quads_meta.json`` is the single
 source of truth mapping each bucket (and the deferred-update pending
 set) to the commit that last wrote it.  A path without it is not a
-store: readers raise ``FileNotFoundError``.  ``commit`` stages a whole
-commit directory first and then publishes with one atomic manifest
-rename (``os.replace`` — swap for a conditional PUT on an object
+store: readers raise ``FileNotFoundError``.  The manifest names its
+bucket hash (``bucket_hash``), and ``StoreSnapshot.open`` raises
+``ValueError`` for any other layout: probing it with this hash would
+answer "absent" for souls stored in another bucket.  ``commit`` stages
+a whole commit directory first and then publishes with one atomic
+manifest rename (``os.replace`` — swap for a conditional PUT on an object
 store), so a crash at ANY point leaves readers on the previous
 consistent snapshot: bucket data and the pending set can never be
 observed half-updated.  Readers resolve live bucket directories through
@@ -61,9 +65,9 @@ import json
 import operator
 import os
 import shutil
-import struct
 import tempfile
 import threading
+import zlib
 from collections import OrderedDict
 from dataclasses import dataclass, field as dc_field
 
@@ -77,6 +81,7 @@ from esgopeta_spark.types import QUAD_SCHEMA
 
 DEFAULT_BUCKETS = 64
 MANIFEST = "_quads_meta.json"
+BUCKET_HASH = "crc32"  # the manifest's layout marker: how souls map to buckets
 PENDING_BUCKET = -1  # the partition value of a commit's pending set
 PROBE_CACHE_BYTES = 64 << 20  # decoded bucket bytes one StoreSnapshot keeps
 _COLUMNS = [f.name for f in QUAD_SCHEMA.fields]
@@ -84,55 +89,19 @@ _as_py = operator.methodcaller("as_py")
 
 
 def _bucket_expr(n_buckets: int):
-    return F.pmod(F.xxhash64("soul"), F.lit(n_buckets)).alias("soul_bucket")
-
-
-_M64 = (1 << 64) - 1
-_P1, _P2, _P3 = 0x9E3779B185EBCA87, 0xC2B2AE3D27D4EB4F, 0x165667B19E3779F9
-_P4, _P5 = 0x85EBCA77C2B2AE63, 0x27D4EB2F165667C5
-_SPARK_SEED = 42  # the seed of Spark's xxhash64()
-
-
-def _rotl(x: int, r: int) -> int:
-    return ((x << r) | (x >> (64 - r))) & _M64
-
-
-def _round(acc: int, lane: int) -> int:
-    return _rotl((acc + lane * _P2) & _M64, 31) * _P1 & _M64
+    return F.pmod(F.crc32(F.col("soul").cast("binary")), F.lit(n_buckets)).alias("soul_bucket")
 
 
 def soul_bucket(soul: str, n_buckets: int) -> int:
-    """The bucket ``_bucket_expr`` assigns ``soul``: XXH64 (seed 42) of its
-    UTF-8 bytes, read as a signed long, ``pmod n_buckets`` — the same
-    arithmetic as Spark's ``XXH64.hashUnsafeBytes``, on the driver and
-    without a Spark job.  Parity is pinned by tests/test_sources.py."""
-    data = soul.encode("utf-8")
-    n, i = len(data), 0
-    if n >= 32:
-        v = [(_SPARK_SEED + _P1 + _P2) & _M64, (_SPARK_SEED + _P2) & _M64, _SPARK_SEED, (_SPARK_SEED - _P1) & _M64]
-        while i + 32 <= n:
-            v = [_round(acc, lane) for acc, lane in zip(v, struct.unpack_from("<4Q", data, i))]
-            i += 32
-        h = (_rotl(v[0], 1) + _rotl(v[1], 7) + _rotl(v[2], 12) + _rotl(v[3], 18)) & _M64
-        for acc in v:
-            h = ((h ^ _round(0, acc)) * _P1 + _P4) & _M64
-    else:
-        h = (_SPARK_SEED + _P5) & _M64
-    h = (h + n) & _M64
-    while i + 8 <= n:
-        h = (_rotl(h ^ _round(0, struct.unpack_from("<Q", data, i)[0]), 27) * _P1 + _P4) & _M64
-        i += 8
-    if i + 4 <= n:
-        h = (_rotl(h ^ (struct.unpack_from("<I", data, i)[0] * _P1 & _M64), 23) * _P2 + _P3) & _M64
-        i += 4
-    for byte in data[i:]:
-        h = _rotl(h ^ (byte * _P5 & _M64), 11) * _P1 & _M64
-    h ^= h >> 33
-    h = h * _P2 & _M64
-    h ^= h >> 29
-    h = h * _P3 & _M64
-    h ^= h >> 32
-    return (h - (1 << 64) if h >> 63 else h) % n_buckets
+    """The bucket ``_bucket_expr`` assigns ``soul``, on the driver and
+    without a Spark job: both take the CRC-32 of its UTF-8 bytes.  Parity
+    is pinned by tests/test_sources.py."""
+    return zlib.crc32(soul.encode("utf-8")) % n_buckets
+
+
+def new_manifest(n_buckets: int, seq: int, buckets: dict, pending: str | None = None) -> dict:
+    """A manifest of this layout, which names its bucket hash and count."""
+    return {"bucket_hash": BUCKET_HASH, "n_buckets": n_buckets, "seq": seq, "buckets": buckets, "pending": pending}
 
 
 @dataclass(frozen=True)
@@ -155,10 +124,14 @@ class StoreSnapshot:
     @classmethod
     def open(cls, path: str) -> StoreSnapshot | None:
         """The snapshot the store at ``path`` publishes now, or None when
-        the path has no manifest."""
+        the path has no manifest.  Raises ``ValueError`` when the manifest
+        is not of this bucket layout."""
         m = load_manifest(path)
         if m is None:
             return None
+        if m.get("bucket_hash") != BUCKET_HASH:
+            found = m.get("bucket_hash")
+            raise ValueError(f"quads store {path}: bucket layout {found!r} is not {BUCKET_HASH!r} ({MANIFEST})")
         return cls(path, m["n_buckets"], m["seq"], m["buckets"], m["pending"])
 
     def bucket_paths(self, buckets=None) -> list[str]:
@@ -331,9 +304,7 @@ def commit(
     reader resolves changes before the publish."""
     seq = base.seq + 1 if base is not None else 0
     written, pending_rel = write_buckets(tagged, path, f"commits/c{seq:06d}", pending)
-    # the bucket count is part of the layout; persist it so readers can't
-    # silently prune with the wrong modulus
-    manifest = {"n_buckets": n_buckets, "seq": seq, "buckets": {**inherited, **written}, "pending": pending_rel}
+    manifest = new_manifest(n_buckets, seq, {**inherited, **written}, pending_rel)
     publish_manifest(path, manifest)
     gc_unreferenced_commits(path, manifest)
 
@@ -355,183 +326,6 @@ def read_quads(spark: SparkSession, path: str) -> DataFrame:
     df = spark.read.parquet(*paths).select(_COLUMNS) if paths else empty_quads(spark)
     df._store_snapshot = snap
     return df
-
-
-def read_any(spark: SparkSession, path: str, fmt: str | None = None, schema=None, **options) -> DataFrame:
-    """Generic scan front-door; format inferred from the extension when
-    not given.  Keep scans bare so pushdown reaches the files."""
-    if fmt is None:
-        ext = os.path.splitext(path)[1].lstrip(".").lower()
-        fmt = {"pq": "parquet"}.get(ext, ext or "parquet")
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    if fmt == "csv":
-        options.setdefault("header", "true")
-        options.setdefault("inferSchema", schema is None)
-    return reader.options(**options).format(fmt).load(path)
-
-
-def write_any(
-    df: DataFrame,
-    path: str,
-    fmt: str = "parquet",
-    mode: str = "overwrite",
-    partition_by: list[str] | None = None,
-    repartition_by_partition_cols: bool = True,
-    **options,
-) -> None:
-    """Generic sink front-door (parquet/orc/json/csv).
-
-    ``partition_by`` lays out Hive-style partition directories —
-    downstream scans filtering on those columns prune whole directories.
-    When partitioning, the frame is first repartitioned ON the partition
-    columns: without it every task writes a file into every partition
-    directory (tasks x partitions small files, the classic sink
-    mistake); with it each partition directory gets one file per key
-    slice.  Set ``repartition_by_partition_cols=False`` when the frame
-    is already clustered (e.g. straight out of a groupBy on the same
-    keys).
-    """
-    if fmt == "csv":
-        options.setdefault("header", "true")
-    out = df
-    if partition_by and repartition_by_partition_cols:
-        out = out.repartition(*[F.col(c) for c in partition_by])
-    writer = out.write.mode(mode).options(**options)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.format(fmt).save(path)
-
-
-def sniff_format_expr(c):
-    """Codegen'd Spark twin of :func:`esgopeta_spark.operators.codecs.
-    sniff_format` over a binary column — magic sniff as binary-prefix
-    comparisons, no Python UDF in the ingest path.  When-order mirrors the
-    python twin's precedence exactly (magics, then ISO-BMFF ftyp, then the
-    field-validated bare MPEG frame sync — r7 ADVICE: ordering divergence)
-    and is pinned against the python twin case-by-case in
-    tests/test_sources.py::test_sniff_format_expr_matches_python_twin.
-
-    Differences from the python twin, both collapsing to kind='other':
-    RIFF-non-WAVE reports 'unknown' here vs 'riff-other', and empty
-    payloads report 'unknown' vs 'empty'.
-    """
-    from pyspark.sql import functions as F
-
-    def _byte_int(col, pos):  # 1-based byte of a binary column as int 0-255
-        return F.conv(F.hex(col.substr(pos, 1)), 16, 10).cast("int")
-
-    return (
-        F.when(c.substr(1, 8) == F.lit(b"\x89PNG\r\n\x1a\n"), "png")
-        .when(c.substr(1, 3) == F.lit(b"\xff\xd8\xff"), "jpeg")
-        .when((c.substr(1, 6) == F.lit(b"GIF87a")) | (c.substr(1, 6) == F.lit(b"GIF89a")), "gif")
-        .when(c.substr(1, 2) == F.lit(b"BM"), "bmp")
-        .when(c.substr(1, 2) == F.lit(b"P6"), "ppm")
-        .when(c.substr(1, 5) == F.lit(b"%PDF-"), "pdf")
-        .when((c.substr(1, 4) == F.lit(b"II*\x00")) | (c.substr(1, 4) == F.lit(b"MM\x00*")), "tiff")
-        .when((c.substr(1, 4) == F.lit(b"RIFF")) & (c.substr(9, 4) == F.lit(b"WAVE")), "wav")
-        # RIFF-non-WAVE must TERMINATE here like the python twin's
-        # 'riff-other' (normalized to unknown): without this arm an AVI
-        # whose little-endian size bytes spell 'ftyp' would fall through
-        # to the mp4 branch (r8 review)
-        .when(c.substr(1, 4) == F.lit(b"RIFF"), "unknown")
-        .when(c.substr(1, 3) == F.lit(b"ID3"), "mp3")
-        .when((F.length(c) >= 12) & (c.substr(5, 4) == F.lit(b"ftyp")), "mp4")
-        # bare MPEG frame sync, validated field-by-field like the python
-        # sniff_format twin (r6 ADVICE) — byte→int via hex/conv keeps the
-        # nibble checks codegen'd, no UDF: b1 top-3 bits set + version &
-        # layer not reserved; b2 bitrate not free/bad + rate not reserved
-        .when(
-            (c.substr(1, 1) == F.lit(b"\xff"))
-            & (_byte_int(c, 2) >= 224)
-            & ((_byte_int(c, 2) / 8).cast("int") % 4 != 1)
-            & ((_byte_int(c, 2) / 2).cast("int") % 4 != 0)
-            & (_byte_int(c, 3) / 16).cast("int").between(1, 14)
-            & ((_byte_int(c, 3) / 4).cast("int") % 4 != 3),
-            "mp3",
-        )
-        .otherwise("unknown")
-    )
-
-
-def read_media_dir(
-    spark: SparkSession,
-    path: str,
-    glob: str | None = None,
-    recursive: bool = True,
-) -> DataFrame:
-    """Ingest a directory of raw media files as the MEDIA_SCHEMA-shaped
-    relation the multimodal kernels consume, via Spark's ``binaryFile``
-    source — the standard way media corpora enter a lakehouse (one row
-    per file: path, length, modification time, content).
-
-    media_id is the xxhash64 of the file path: stable across re-reads,
-    independent of listing order, and collision-safe at corpus scale
-    far beyond file counts.  ``kind`` is sniffed from the payload magic
-    (image/audio/video/other), so the frame works on mixed directories.
-    Column pruning applies: a query that never touches ``payload`` reads
-    file metadata only (binaryFile skips content IO for unprojected
-    content columns).
-    """
-    from pyspark.sql import functions as F
-
-    reader = spark.read.format("binaryFile")
-    if glob:
-        reader = reader.option("pathGlobFilter", glob)
-    if recursive:
-        reader = reader.option("recursiveFileLookup", "true")
-    raw = reader.load(path)
-    fmt = sniff_format_expr(F.col("content"))
-    kind = (
-        F.when(fmt.isin("bmp", "ppm", "png", "jpeg", "gif", "tiff"), F.lit("image"))
-        .when(fmt.isin("wav", "mp3"), F.lit("audio"))
-        .when(fmt == "mp4", F.lit("video"))
-        .otherwise(F.lit("other"))
-    )
-    return raw.select(
-        F.xxhash64(F.col("path")).alias("media_id"),
-        kind.alias("kind"),
-        F.col("content").alias("payload"),
-        # the exact MEDIA_SCHEMA meta struct the downstream kernels read
-        # (resize_media decode path, frame_sample_plan meta.duration_ms):
-        # dims/rates are unknown at ingest — decode_media fills them —
-        # but the struct SHAPE must match or those kernels fail
-        F.struct(
-            F.lit(None).cast("int").alias("width"),
-            F.lit(None).cast("int").alias("height"),
-            F.lit(None).cast("int").alias("sample_rate"),
-            F.lit(None).cast("int").alias("duration_ms"),
-            fmt.alias("format"),
-        ).alias("meta"),
-        F.col("path").alias("source_path"),
-    )
-
-
-def write_bucketed_table(
-    df: DataFrame,
-    table: str,
-    bucket_col: str,
-    n_buckets: int = 16,
-    sort_col: str | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Persist ``df`` as a Hive-bucketed managed table: co-partitioned by
-    ``bucket_col`` into ``n_buckets`` files per partition (optionally
-    sorted within buckets).  Two tables bucketed the same way JOIN WITH
-    NO EXCHANGE on the bucket key — the single biggest shuffle
-    eliminator for a repeatedly-joined 100 TB fact/dim pair (the shuffle
-    is paid ONCE at write time, then every downstream join is co-located;
-    pinned by tests/test_sources.py::test_bucketed_join_has_no_exchange).
-
-    Uses ``saveAsTable`` (bucket metadata lives in the session catalog /
-    metastore — plain parquet paths cannot carry it); on a real cluster
-    the warehouse dir + metastore make this durable across sessions.
-    """
-    w = df.write.format("parquet").mode(mode).bucketBy(n_buckets, bucket_col)
-    if sort_col:
-        w = w.sortBy(sort_col)
-    w.saveAsTable(table)
 
 
 def compaction_plan(
@@ -557,12 +351,8 @@ def compaction_plan(
     group's total bytes and file count — the work order a compactor
     executes.  Single-file groups whose file already exceeds the target
     are left alone by the executor (they're already compact); the plan
-    marks them ``already_compact = 1``.
-
-    Scale shape: manifests are rows-about-files (millions of rows for
-    billions of data rows), so the two windows here — the running sum
-    and the per-group rollup — cost nothing at any table size; both key
-    on the partition column the manifest is naturally clustered by."""
+    marks them ``already_compact = 1``.  Both windows run over
+    rows-about-files, so they cost little at any table size."""
     w = Window.partitionBy(part_col).orderBy(F.col(id_col).asc())
     before = F.coalesce(
         F.sum(bytes_col).over(w.rowsBetween(Window.unboundedPreceding, -1)),

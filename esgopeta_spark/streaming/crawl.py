@@ -90,8 +90,7 @@ def conditional_fetch_events(
 
 
 def _make_cf_handler():
-    """Per-url handler (closure, cloudpickle-by-value — see
-    ham_stream._make_handler for why module-level handlers break)."""
+    """Per-url handler (a closure, which cloudpickle ships by value)."""
     import json as _json
 
     def handler(key, pdfs, gstate):

@@ -21,35 +21,17 @@ no driver involvement per key.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import (
-    BooleanType,
-    DoubleType,
-    StringType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.streaming.state import GroupStateTimeout
+from pyspark.sql.types import DoubleType, StringType, StructField, StructType
 
+from esgopeta_spark.types import QUAD_SCHEMA, VALUE_COLUMNS, value_json_py
 
-_VALUE_FIELDS = [
-    ("value_type", StringType()),
-    ("value_number_raw", StringType()),
-    ("value_number", DoubleType()),
-    ("value_string", StringType()),
-    ("value_bool", BooleanType()),
-    ("value_relation", StringType()),
-]
+OUTPUT_SCHEMA = QUAD_SCHEMA
 
-OUTPUT_SCHEMA = StructType(
-    [StructField("soul", StringType(), False), StructField("field", StringType(), False)]
-    + [StructField(n, t, True) for n, t in _VALUE_FIELDS]
-    + [StructField("state", DoubleType(), False)]
-)
-
-# winner tuple + json-encoded pending futures list
+# winner tuple + json-encoded pending futures list; every field is
+# nullable, since a key whose only updates are deferred has no winner yet
 STATE_SCHEMA = StructType(
-    [StructField(n, t, True) for n, t in _VALUE_FIELDS]
+    [StructField(f.name, f.dataType, True) for f in QUAD_SCHEMA.fields if f.name in VALUE_COLUMNS]
     + [
         StructField("state", DoubleType(), True),
         StructField("value_json", StringType(), True),
@@ -57,43 +39,20 @@ STATE_SCHEMA = StructType(
     ]
 )
 
-_VALUE_COLS = [n for n, _ in _VALUE_FIELDS]
-
 
 def _make_handler(timers_enabled: bool):
-    """Build the per-key stateful handler as a CLOSURE.
-
-    cloudpickle serializes closures by value — including the helper
-    functions defined inside — so executors never import esgopeta_spark.
-    (A module-level handler is pickled by reference and dies with
-    ModuleNotFoundError whenever the worker's sys.path lacks the repo,
-    e.g. a driver launched from another cwd.)
-    """
+    """Build the per-key stateful handler, a closure over
+    ``timers_enabled``.  Workers import ``esgopeta_spark.types`` for the
+    HAM tiebreak: ``get_spark`` puts the package root on their
+    ``PYTHONPATH``."""
     import json as _json
     import time as _time
-
-    value_cols = list(_VALUE_COLS)
-
-    def _vjson(row):
-        # inlined copy of types.value_json_py (keep in sync; unit test
-        # test_handler_vjson_matches_types pins the equivalence)
-        vt = row["value_type"]
-        if vt == "null":
-            return "null"
-        if vt == "number":
-            raw = row.get("value_number_raw")
-            return raw if raw is not None else _json.dumps(row.get("value_number"))
-        if vt == "string":
-            return _json.dumps(row.get("value_string"), ensure_ascii=False, separators=(",", ":"))
-        if vt == "bool":
-            return "true" if row.get("value_bool") else "false"
-        return '{"#":' + _json.dumps(row.get("value_relation"), ensure_ascii=False) + "}"
 
     def handler(key, pdfs, gstate):
         soul, field = key
         if gstate.exists:
             st = gstate.get
-            winner = dict(zip(value_cols + ["state", "value_json"], st[:8]))
+            winner = dict(zip(VALUE_COLUMNS + ["state", "value_json"], st[:8]))
             pending = _json.loads(st[8]) if st[8] else []
         else:
             winner = None
@@ -104,23 +63,23 @@ def _make_handler(timers_enabled: bool):
         incoming = []
         for pdf in pdfs:
             for rec in pdf.to_dict("records"):
-                incoming.append({c: rec.get(c) for c in value_cols + ["state"]})
+                incoming.append({c: rec.get(c) for c in VALUE_COLUMNS + ["state"]})
 
         # re-attempt previously deferred futures whose time has come
         ready = [p for p in pending if p["state"] <= now_ms]
         pending = [p for p in pending if p["state"] > now_ms]
 
         emitted = None
-        for rec in sorted(incoming + ready, key=lambda r: (r["state"], _vjson(r))):
+        for rec in sorted(incoming + ready, key=lambda r: (r["state"], value_json_py(r))):
             if rec["state"] > now_ms:  # TooFutureDeferred
                 pending.append(rec)
                 continue
-            if winner is None or (rec["state"], _vjson(rec)) > (winner["state"], winner["value_json"]):
-                winner = {**{c: rec.get(c) for c in value_cols}, "state": rec["state"], "value_json": _vjson(rec)}
+            if winner is None or (rec["state"], value_json_py(rec)) > (winner["state"], winner["value_json"]):
+                winner = {**{c: rec.get(c) for c in VALUE_COLUMNS}, "state": rec["state"], "value_json": value_json_py(rec)}
                 emitted = winner
 
         new_state = tuple(
-            [winner.get(c) if winner else None for c in value_cols]
+            [winner.get(c) if winner else None for c in VALUE_COLUMNS]
             + [
                 winner["state"] if winner else None,
                 winner["value_json"] if winner else None,
@@ -138,7 +97,7 @@ def _make_handler(timers_enabled: bool):
             import pandas as _pd
 
             yield _pd.DataFrame(
-                [{"soul": soul, "field": field, **{c: emitted.get(c) for c in value_cols}, "state": emitted["state"]}]
+                [{"soul": soul, "field": field, **{c: emitted.get(c) for c in VALUE_COLUMNS}, "state": emitted["state"]}]
             )
 
     return handler
@@ -156,12 +115,12 @@ def streaming_ham_merge(updates: DataFrame, deferral_timers: bool = False) -> Da
     schedules no-data micro-batches to fire timers, so it never "drains":
     drive it with a continuous trigger, not availableNow.  With False
     (default), deferred rows still sit in state and re-merge the next
-    time their key is touched (and always at batch compaction via
-    ham_apply_updates) — the right trade for drain-and-stop pipelines.
+    time their key is touched — the right trade for drain-and-stop
+    pipelines.  (The batch write path defers with ``ham.split_deferred``
+    and carries the rows in the store's pending set instead.)
     """
-    quad_cols = ["soul", "field", *_VALUE_COLS, "state"]
     return (
-        updates.select(*quad_cols)
+        updates.select(*QUAD_SCHEMA.names)
         .groupBy("soul", "field")
         .applyInPandasWithState(
             _make_handler(deferral_timers),

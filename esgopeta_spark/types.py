@@ -7,10 +7,12 @@ The reference stores the whole graph as a hash map keyed by
 — a tagged union, one row per (soul, field) — while the *logical* graph
 schema stays fully dynamic, exactly like the reference.
 
-Scale note: ``quads`` is THE hot relation.  At 100 TB it should be
-written partitioned/bucketed by ``hash(soul)`` so path-traversal joins
-(soul = soul) co-locate without a shuffle; every merge below keys on
-(soul, field) so partial aggregation is map-side.
+Scale note: ``quads`` is THE hot relation.  The store
+(``sources/io.py``) writes it in directories by ``crc32(soul)``, so a
+point probe reads one bucket and an upsert rewrites only the buckets it
+touches; traversal joins read those directories with no bucketing spec,
+so a sort-merge hop still shuffles.  Every merge keys on (soul, field),
+so partial aggregation is map-side.
 """
 
 from __future__ import annotations

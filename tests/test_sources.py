@@ -1,4 +1,4 @@
-"""E1 sources/sinks: format round-trips and the bucketed quads layout."""
+"""E1 sources/sinks: the bucketed quads store."""
 
 from __future__ import annotations
 
@@ -15,12 +15,18 @@ import pyarrow.parquet as pq
 import pytest
 from hypothesis import example, given, settings
 from hypothesis import strategies as st
-from pyspark.sql import functions as F
 
-from esgopeta_spark.session import read_table
 from esgopeta_spark.sources import io as sources_io
-from esgopeta_spark.sources import read_any, read_quads, write_quads
-from esgopeta_spark.sources.io import MANIFEST, StoreSnapshot, load_manifest, publish_manifest, soul_bucket
+from esgopeta_spark.sources import read_quads, write_quads
+from esgopeta_spark.sources.io import (
+    BUCKET_HASH,
+    MANIFEST,
+    StoreSnapshot,
+    load_manifest,
+    new_manifest,
+    publish_manifest,
+    soul_bucket,
+)
 from esgopeta_spark.types import QUAD_SCHEMA, encode_value
 
 
@@ -75,10 +81,10 @@ def test_write_quads_over_a_store_replaces_its_snapshot(spark, tmp_path):
 
 
 def test_soul_bucket_matches_spark_bucket_hash(spark):
-    """soul_bucket is the driver twin of the write path's bucket column,
-    Spark's pmod(xxhash64(soul), n): byte lengths 0-70 cover the 32-byte
-    stripe loop and the 8-, 4- and 1-byte tails; non-ASCII and generated
-    souls hash as their UTF-8 bytes."""
+    """soul_bucket (zlib's CRC-32) puts every soul in the bucket the write
+    path's column, Spark's pmod(crc32(cast(soul as binary)), n), puts it
+    in: souls of every byte length 0-70, non-ASCII souls and generated
+    souls, all hashed as their UTF-8 bytes."""
     from esgopeta_spark.soul import SoulGen
     from esgopeta_spark.sources.io import _bucket_expr, soul_bucket
 
@@ -120,7 +126,7 @@ def _pyarrow_store(path, rows, n_buckets, unlisted=None):
                 pq.write_table(pa.Table.from_pylist(part, schema=_ARROW_QUADS), os.path.join(path, rel, f"part-{k}.parquet"))
         if b != unlisted:
             listed[str(b)] = rel
-    publish_manifest(path, {"n_buckets": n_buckets, "seq": 0, "buckets": listed, "pending": None})
+    publish_manifest(path, new_manifest(n_buckets, 0, listed))
 
 
 def _canon(rows):
@@ -301,9 +307,42 @@ def test_stale_manifest_temp_file_is_neither_published_nor_blocking(spark, tmp_p
             assert f.read() == text
 
     with mock.patch.object(sources_io.os, "replace", side_effect=OSError("disk gone")), pytest.raises(OSError):
-        publish_manifest(path, {"n_buckets": 2, "seq": 2, "buckets": {}, "pending": None})
+        publish_manifest(path, new_manifest(2, 2, {}))
     assert sorted(n for n in os.listdir(path) if n.endswith(".tmp")) == sorted(stale)
     assert StoreSnapshot.open(path).seq == 1
+
+
+def test_writers_mark_the_bucket_layout_and_readers_refuse_any_other(spark, tmp_path):
+    """write_quads and a first upsert both publish the bucket_hash marker.
+    A manifest without it (the shape written before the bucket hash was
+    CRC-32) or with another value makes StoreSnapshot.open and every
+    reader and writer that opens it raise a ValueError naming the layout,
+    instead of probing the wrong bucket and answering "absent"."""
+    from esgopeta_spark.streaming.upsert import ham_upsert_batch, read_pending
+
+    def quads(souls):
+        return spark.createDataFrame([{"soul": s, "field": "f", **encode_value(s), "state": 1.0} for s in souls], QUAD_SCHEMA)
+
+    written, upserted = str(tmp_path / "written"), str(tmp_path / "upserted")
+    write_quads(quads(["a", "b"]), written, n_buckets=4)
+    ham_upsert_batch(spark, quads(["a"]), upserted, n_buckets=4, as_of_ms=1e6)
+    for path in [written, upserted]:
+        assert load_manifest(path)["bucket_hash"] == BUCKET_HASH == "crc32"
+
+    marked = load_manifest(written)
+    for layout in [None, "xxhash64"]:
+        old = {k: v for k, v in marked.items() if k != "bucket_hash"}
+        publish_manifest(written, old if layout is None else {**old, "bucket_hash": layout})
+        for read in [
+            lambda: StoreSnapshot.open(written),
+            lambda: read_quads(spark, written),
+            lambda: read_pending(spark, written),
+            lambda: ham_upsert_batch(spark, quads(["c"]), written, as_of_ms=1e6),
+            lambda: write_quads(quads(["c"]), written),
+        ]:
+            with pytest.raises(ValueError, match=f"bucket layout {layout!r} is not 'crc32'"):
+                read()
+        assert load_manifest(written)["seq"] == marked["seq"]  # the refused writers published nothing
 
 
 def test_concurrent_publishes_never_share_a_temp_file(tmp_path):
@@ -346,43 +385,6 @@ def test_concurrent_publishes_never_share_a_temp_file(tmp_path):
     assert all(os.path.dirname(t) == path for t in temps)
     assert all(m is None or (set(m) == {"writer", "i", "pad"} and len(m["pad"]) == 4096) for m in seen)
     assert [n for n in os.listdir(path) if n.endswith(".tmp")] == []
-
-
-def test_read_any_formats(spark, tmp_path):
-    df = spark.range(10).select(F.col("id"), (F.col("id") * 2).alias("v"))
-    for fmt in ["parquet", "json", "csv"]:
-        p = str(tmp_path / fmt)
-        df.write.format(fmt).option("header", "true").save(p)
-        back = read_any(spark, p, fmt=fmt)
-        assert back.count() == 10
-        vals = {(int(r["id"]), int(r["v"])) for r in back.collect()}
-        assert vals == {(i, 2 * i) for i in range(10)}
-
-
-def test_write_any_partitioned_roundtrip(spark, tmp_path):
-    """write_any lays out prunable partition dirs in every format; the
-    partition column round-trips and a partition filter prunes to one
-    directory's files."""
-    import os
-
-    from esgopeta_spark.sources.io import read_any, write_any
-
-    df = spark.range(0, 1000).select(
-        F.col("id"),
-        (F.col("id") % 4).cast("int").alias("bucket"),
-        F.concat(F.lit("v"), F.col("id").cast("string")).alias("payload"),
-    )
-    for fmt in ["parquet", "orc", "json", "csv"]:
-        path = str(tmp_path / fmt)
-        write_any(df, path, fmt=fmt, partition_by=["bucket"])
-        dirs = sorted(d for d in os.listdir(path) if d.startswith("bucket="))
-        assert dirs == ["bucket=0", "bucket=1", "bucket=2", "bucket=3"], fmt
-        back = read_any(spark, path, fmt=fmt)
-        assert back.count() == 1000, fmt
-        assert back.filter(F.col("bucket") == 2).count() == 250, fmt
-        # partition filter must reach the scan as partition pruning
-        plan = back.filter(F.col("bucket") == 2)._jdf.queryExecution().executedPlan().toString()
-        assert "PartitionFilters: [" in plan and "bucket" in plan.split("PartitionFilters")[1][:80], fmt
 
 
 def test_kafka_update_stream_adapter(spark):
@@ -452,149 +454,6 @@ def test_kafka_record_parsing_without_classpath(spark):
     assert out["m1"]["recv_ts"] == datetime.datetime(2024, 1, 1, 0, 0, 0)
     assert out["m2"]["value_number"] == 7.0 and out["m2"]["ack_id"] == "a1"
     assert out["m2"]["recv_ts"] == broker_ts  # broker-time fallback fired
-
-
-def test_read_media_dir_binaryfile(spark, tmp_path):
-    """binaryFile ingest of a mixed media directory: stable path-hash ids,
-    payload-magic kind sniff (codegen, no python UDF), and the result
-    feeds decode_media directly."""
-    import numpy as np
-
-    from esgopeta_spark.operators import codecs
-    from esgopeta_spark.operators.multimodal import decode_media
-    from esgopeta_spark.sources.io import read_media_dir
-
-    d = tmp_path / "media"
-    (d / "sub").mkdir(parents=True)
-    arr = np.stack([np.full((6, 8), v, np.uint8) for v in (10, 20, 30)], axis=-1)
-    (d / "a.png").write_bytes(codecs.encode_png(arr))
-    (d / "b.gif").write_bytes(codecs.encode_gif(arr))
-    (d / "sub" / "c.wav").write_bytes(codecs.encode_wav(np.zeros(160, np.int16), 8000))
-    (d / "sub" / "d.mp4").write_bytes(codecs.encode_mp4_stub(1200, 64, 48))
-    (d / "junk.bin").write_bytes(b"\x00\x01\x02garbage")
-    (d / "e.tiff").write_bytes(codecs.encode_tiff(arr, packbits=True))
-
-    media = read_media_dir(spark, str(d))
-    rows = media.collect()
-    assert len(rows) == 6
-    kinds = sorted(r["kind"] for r in rows)
-    assert kinds == ["audio", "image", "image", "image", "other", "video"]
-    assert len({r["media_id"] for r in rows}) == 6  # stable distinct ids
-    # re-read gives identical ids (path-hash, not listing order)
-    assert {r["media_id"] for r in read_media_dir(spark, str(d)).collect()} == {
-        r["media_id"] for r in rows
-    }
-    dec = {r["format"]: r for r in decode_media(media).collect()}
-    assert dec["png"]["ok"] and (dec["png"]["width"], dec["png"]["height"]) == (8, 6)
-    assert dec["gif"]["ok"] and (dec["gif"]["width"], dec["gif"]["height"]) == (8, 6)
-    assert dec["wav"]["ok"] and dec["wav"]["sample_rate"] == 8000
-    assert dec["tiff"]["ok"] and (dec["tiff"]["width"], dec["tiff"]["height"]) == (8, 6)
-    assert not dec["mp4"]["ok"] and dec["mp4"]["duration_ms"] == 1200
-
-
-def test_sniff_format_expr_matches_python_twin(spark):
-    """Pin the codegen'd Spark sniff chain to the python sniff_format twin
-    byte-pattern by byte-pattern (r7 ADVICE: the bare-frame-sync field
-    validation gained six assertions python-side with no Spark coverage,
-    and the when-order around ftyp had silently diverged)."""
-    import numpy as np
-
-    from esgopeta_spark.operators import codecs
-    from esgopeta_spark.sources.io import sniff_format_expr
-
-    arr = np.stack([np.full((4, 4), v, np.uint8) for v in (10, 20, 30)], axis=-1)
-    payloads = [
-        codecs.encode_bmp(arr),
-        codecs.encode_ppm(arr),
-        codecs.encode_wav(np.zeros(4, np.int16), 8000),
-        codecs.encode_png(arr),
-        codecs.encode_jpeg(arr),
-        codecs.encode_gif(arr),
-        codecs.encode_tiff(arr),
-        codecs.encode_tiff(arr, big_endian=True),
-        b"\x89PNG\r\n\x1a\nxxxx",
-        b"\xff\xd8\xff\xe0",
-        b"\x00\x00\x00\x18ftypisomxxxx",
-        b"ID3\x04xxxx",
-        # the six frame-sync field-validation cases from test_sniff_format
-        b"\xff\xfb\x90\x00",  # MPEG1 L3 128k/44.1 -> mp3
-        b"\xff\xf9\x90\x00",  # reserved layer -> unknown
-        b"\xff\xe9\x90\x00",  # reserved version -> unknown
-        b"\xff\xfb\x00\x00",  # free bitrate -> unknown
-        b"\xff\xfb\xf0\x00",  # bad bitrate -> unknown
-        b"\xff\xfb\x9c\x00",  # reserved rate -> unknown
-        # ordering: valid frame-sync bytes AND ftyp at offset 4 -> the
-        # python twin says mp4; the Spark chain must agree (r7 ADVICE)
-        b"\xff\xfb\x90\x00ftypisomxxxx",
-        b"RIFFxxxxAVI xxxx",  # riff-other (normalized below)
-        # RIFF whose little-endian size bytes spell 'ftyp': the python
-        # twin short-circuits to riff-other; the Spark chain must NOT
-        # fall through to the mp4 branch (r8 review)
-        b"RIFFftypisomxxxx",
-        b"%PDF-1.4 fixture head",  # r11: pdf routed to extract_pdf_text
-        b"%PDF",  # truncated magic -> unknown
-        b"\x00\x01\x02garbage",
-        b"\xff",  # too short for the frame-sync field checks
-        b"\xff\xfb",
-    ]
-    df = spark.createDataFrame(
-        [(i, p) for i, p in enumerate(payloads)], "i int, content binary"
-    )
-    got = {
-        r["i"]: r["fmt"]
-        for r in df.select("i", sniff_format_expr(F.col("content")).alias("fmt")).collect()
-    }
-    for i, p in enumerate(payloads):
-        want = codecs.sniff_format(p)
-        if want in ("riff-other", "empty"):  # documented twin divergence
-            want = "unknown"
-        assert got[i] == want, f"payload {i}: spark={got[i]!r} python={want!r}"
-
-
-def test_bucketed_join_has_no_exchange(spark, sf_dir, tmp_path):
-    """Two tables bucketed on the join key must join with ZERO Exchange
-    nodes (the write-once shuffle buys every later join), and the result
-    must match the plain shuffled join."""
-    import re
-
-    from esgopeta_spark.sources.io import write_bucketed_table
-
-    li = read_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey", "l_quantity")
-    o = read_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    spark.sql("DROP TABLE IF EXISTS b_lineitem")
-    spark.sql("DROP TABLE IF EXISTS b_orders")
-    write_bucketed_table(li, "b_lineitem", "l_orderkey", n_buckets=8)
-    write_bucketed_table(o, "b_orders", "o_orderkey", n_buckets=8)
-    try:
-        bl, bo = spark.table("b_lineitem"), spark.table("b_orders")
-        join_only = bl.join(bo, bl.l_orderkey == bo.o_orderkey)
-        # disable broadcast so the join alone decides the distribution;
-        # RESTORE the configured value afterwards (unset would fall back
-        # to Spark's 10MB default, not the session's 64MB — leaking a
-        # smaller threshold into later broadcast-posture tests)
-        old_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try:
-            def n_exchanges(df):
-                p = df._jdf.queryExecution().explainString(
-                    spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-                )
-                return len(re.findall(r"^\(\d+\) Exchange", p, re.M)), p
-            n_b, p_b = n_exchanges(join_only)
-            assert n_b == 0, p_b  # co-located: bucket metadata killed BOTH shuffles
-            # control: the same join over plain parquet MUST shuffle both sides
-            n_plain, p_plain = n_exchanges(li.join(o, li.l_orderkey == o.o_orderkey))
-            assert n_plain >= 2, p_plain
-            got = {tuple(r) for r in
-                   join_only.groupBy("o_custkey").count().collect()}
-        finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thresh)
-        want = {tuple(r) for r in
-                li.join(o, li.l_orderkey == o.o_orderkey).groupBy("o_custkey").count().collect()}
-        assert got == want
-    finally:
-        spark.sql("DROP TABLE IF EXISTS b_lineitem")
-        spark.sql("DROP TABLE IF EXISTS b_orders")
 
 
 def test_compaction_plan_semantics(spark):

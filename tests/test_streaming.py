@@ -155,24 +155,6 @@ def test_streaming_ham_on_events_scale(spark, sf_dir, tmp_path):
     assert final == expected and len(expected) == 75
 
 
-def test_handler_vjson_matches_types():
-    """The closure-inlined value-json encoder must stay in sync with
-    types.value_json_py (the HAM tiebreak key)."""
-    import inspect
-
-    from esgopeta_spark.streaming.ham_stream import _make_handler
-    from esgopeta_spark.types import encode_value, value_json_py
-
-    # reach the inner _vjson through the closure
-    handler = _make_handler(False)
-    vjson = handler.__closure__[len(handler.__closure__) - 1]
-    cells = {c.cell_contents for c in handler.__closure__ if callable(getattr(c, "cell_contents", None))}
-    fn = next(c for c in cells if getattr(c, "__name__", "") == "_vjson")
-    for v in ["plain", 'quo"te', "unié", 1, -2.5, True, False, None, {"#": "abc"}]:
-        row = encode_value(v)
-        assert fn(row) == value_json_py(row), v
-
-
 def test_stream_stream_join_matches_batch(spark, sf_dir):
     """Stream-stream interval join == the same join on static frames."""
     from esgopeta_spark.streaming.ingest import read_events_stream

@@ -37,7 +37,7 @@ sys.path.insert(0, ROOT)
 
 import pyarrow.parquet as pq  # noqa: E402
 
-from esgopeta_spark.sources.io import StoreSnapshot, publish_manifest, soul_bucket  # noqa: E402
+from esgopeta_spark.sources.io import StoreSnapshot, new_manifest, publish_manifest, soul_bucket  # noqa: E402
 from perfbench import gen  # noqa: E402
 
 BUCKET = 0
@@ -51,7 +51,7 @@ def write_bucket(path: str, spec: gen.GraphSpec, seed: int) -> list[str]:
     rel = f"commits/c000000/data/soul_bucket={BUCKET}"
     os.makedirs(os.path.join(path, rel))
     gen.write_table(gen.to_table(rows), os.path.join(path, rel, "part-0.parquet"))
-    publish_manifest(path, {"n_buckets": spec.n_buckets, "seq": 0, "buckets": {str(BUCKET): rel}, "pending": None})
+    publish_manifest(path, new_manifest(spec.n_buckets, 0, {str(BUCKET): rel}))
     return sorted(mine)
 
 
