@@ -19,9 +19,11 @@ no custom state.  Deferral (gun/storage.go:107-117) is an *eligibility
 filter* applied before the merge: rows with ``state > as_of`` are
 carried to a future merge rather than entering this one.
 
-Scale notes: ``ham_merge`` is one hash aggregate; with quads bucketed by
-``soul`` the shuffle disappears.  No Python runs on the hot path — the
-JSON tiebreak key is a codegen'd string expression.
+Scale notes: ``ham_merge`` is one hash aggregate (one shuffle on the
+key, map-side partials); reading a bucketed store does not remove that
+shuffle, but an upsert commit's merge reuses the exchange that writes
+the buckets.  No Python runs on the hot path — the JSON tiebreak key is a
+codegen'd string expression.
 """
 
 from __future__ import annotations

@@ -17,8 +17,47 @@ implements the same integer recurrence.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+
+def _degree_edges(
+    edges: DataFrame, src: str, dst: str, checkpoint: str
+) -> tuple[DataFrame, DataFrame]:
+    """The one materialization both pageranks iterate over: ``(src, dst,
+    _deg)``, each edge with its source's out-degree (a window count over
+    src), cut by one lazy checkpoint that the first job fills; and the
+    node set (src ∪ dst, distinct), derived from it and not cut again."""
+    from pyspark.sql import Window
+
+    from esgopeta_spark.operators.checkpoint import materialize
+
+    by_src = Window.partitionBy("src")
+    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+    ed = materialize(e.withColumn("_deg", F.count("*").over(by_src)), checkpoint, eager=False)
+    return ed, ed.select(F.col("src").alias("node")).union(ed.select("dst")).distinct()
+
+
+def _iterate_rank(
+    ed: DataFrame, base: DataFrame, start: Column, teleport: Column, iterations: int
+) -> DataFrame:
+    """The integer recurrence over ``ed``: r0(v) = start(v), then per
+    round rank'(v) = teleport(v) + (85 · Σ_u→v rank(u) DIV _deg(u)) DIV 100
+    for every ``node`` of ``base`` (``start``/``teleport`` read its
+    columns).  Returns (node, rank_micro)."""
+    rank = base.select("node", start.cast("bigint").alias("rank_micro"))
+    for _ in range(iterations):
+        contrib = (
+            ed.join(rank, ed.src == rank.node)
+            .select("dst", F.expr("rank_micro DIV _deg").alias("_c"))
+            .groupBy("dst")
+            .agg(F.sum("_c").alias("_in"))
+        )
+        rank = base.join(contrib, base.node == contrib.dst, "left").select(
+            "node",
+            (teleport + F.expr("(85 * coalesce(_in, 0)) DIV 100")).cast("bigint").alias("rank_micro"),
+        )
+    return rank
 
 
 def pagerank(
@@ -39,44 +78,16 @@ def pagerank(
     Dangling-node mass (nodes with no out-edges) is dropped, not
     redistributed — the simplified formulation; the oracle mirrors it.
 
-    Plan shape: out-degree is computed once and joined by src each
-    round; each round is edges ⋈ rank (shuffle on src) then a
-    sum-shuffle on dst — partial aggregation combines map-side.  The
-    iteration count is a small constant so the growing logical plan is
-    harmless (no checkpoint needed; cf. dup_components for the
-    unbounded-iteration treatment).  At scale, pre-partition edges by
-    src and ranks by node to make the per-round join co-located.
+    Plan shape: the degree-annotated edges are materialized once
+    (``checkpoint`` picks local or reliable blocks) and the node set and
+    every round read them; each round is edges ⋈ rank (shuffle on src)
+    then a sum-shuffle on dst with map-side partial aggregation.  The
+    iteration count is a small constant, so the growing plan is harmless
+    (cf. dup_components for unbounded iteration).  At scale,
+    pre-partition edges by src and ranks by node.
     """
-    # materialize the (possibly expensive) upstream edge pipeline ONCE;
-    # nodes/degrees/annotated-edges all derive from this single
-    # materialization instead of re-running the producer per derivation.
-    # localCheckpoint over persist(): the blocks are reclaimed by the
-    # ContextCleaner when the result goes out of scope — persist() would
-    # pin CacheManager entries for the session
-    from esgopeta_spark.operators.checkpoint import materialize
-
-    e = materialize(edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")), checkpoint)
-    nodes = materialize(
-        e.select(F.col("src").alias("node")).union(e.select("dst")).distinct(), checkpoint
-    )
-    deg = e.groupBy("src").agg(F.count("*").alias("_deg"))
-    # every iteration re-reads the degree-annotated edges and the node set
-    ed = materialize(e.join(deg, "src"), checkpoint)  # (src, dst, _deg)
-    rank = nodes.withColumn("rank_micro", F.lit(1000000).cast("bigint"))
-    for _ in range(iterations):
-        contrib = (
-            ed.join(rank, ed.src == rank.node)
-            .select("dst", F.expr("rank_micro DIV _deg").alias("_c"))
-            .groupBy("dst")
-            .agg(F.sum("_c").alias("_in"))
-        )
-        rank = nodes.join(contrib, nodes.node == contrib.dst, "left").select(
-            "node",
-            (F.lit(150000).cast("bigint") + F.expr("(85 * coalesce(_in, 0)) DIV 100")).alias(
-                "rank_micro"
-            ),
-        )
-    return rank
+    ed, nodes = _degree_edges(edges, src, dst, checkpoint)
+    return _iterate_rank(ed, nodes, F.lit(1000000), F.lit(150000), iterations)
 
 
 def triangle_counts(
@@ -485,7 +496,7 @@ def personalized_pagerank(
     the SEED set only, so ranks measure proximity to the seeds — the
     GraphX-personalized-variant shape used for 'similar to these'
     expansion.  Integer micro-units with floor division (engine-exact,
-    order-free), same discipline as :func:`pagerank`:
+    order-free), the same recurrence as :func:`pagerank`:
 
         teleport(v∈S) = (150000 · |V|) DIV |S|      else 0
         r0(v∈S)       = (1000000 · |V|) DIV |S|     else 0
@@ -493,46 +504,27 @@ def personalized_pagerank(
 
     (total mass scaled by |V| so values are comparable to the uniform
     variant; |V| and |S| ride a broadcast 1-row aggregate, no collect).
-
-    Plan shape: identical per-round joins to pagerank (shuffle on src,
-    sum-shuffle on dst) plus one broadcast seed-flag join on the node
-    set; fixed iteration count, materialized edge pipeline."""
+    S is the distinct seeds that are nodes of the graph.  Plan shape:
+    pagerank's one edge materialization plus one more lazy checkpoint,
+    the node set flagged by a broadcast seed join, which the |V|/|S|
+    aggregate and every round re-read."""
     from esgopeta_spark.operators.checkpoint import materialize
 
-    e = materialize(edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")), checkpoint)
-    nodes = materialize(
-        e.select(F.col("src").alias("node")).union(e.select("dst")).distinct(), checkpoint
-    )
-    deg = e.groupBy("src").agg(F.count("*").alias("_deg"))
-    ed = materialize(e.join(deg, "src"), checkpoint)
+    ed, nodes = _degree_edges(edges, src, dst, checkpoint)
     sd = seeds.select(F.col(seed_col).alias("node")).distinct()
     flagged = materialize(
         nodes.join(F.broadcast(sd.withColumn("_is_seed", F.lit(1))), "node", "left")
         .select("node", F.coalesce(F.col("_is_seed"), F.lit(0)).alias("_is_seed")),
         checkpoint,
+        eager=False,
     )
     tot = flagged.agg(
         F.count(F.lit(1)).cast("bigint").alias("_nv"),
         F.sum("_is_seed").cast("bigint").alias("_ns"),
     )
     base = flagged.crossJoin(F.broadcast(tot))
-    rank = base.select(
-        "node", "_is_seed", "_nv", "_ns",
-        F.expr("CASE WHEN _is_seed = 1 THEN (1000000 * _nv) DIV _ns ELSE 0 END")
-        .cast("bigint").alias("rank_micro"),
-    )
-    for _ in range(iterations):
-        contrib = (
-            ed.join(rank.select("node", "rank_micro"), ed.src == F.col("node"))
-            .select("dst", F.expr("rank_micro DIV _deg").alias("_c"))
-            .groupBy("dst")
-            .agg(F.sum("_c").alias("_in"))
-        )
-        rank = base.join(contrib, base.node == contrib.dst, "left").select(
-            "node", "_is_seed", "_nv", "_ns",
-            (
-                F.expr("CASE WHEN _is_seed = 1 THEN (150000 * _nv) DIV _ns ELSE 0 END")
-                + F.expr("(85 * coalesce(_in, 0)) DIV 100")
-            ).cast("bigint").alias("rank_micro"),
-        )
-    return rank.select("node", "rank_micro")
+
+    def seed_mass(m: int) -> Column:
+        return F.expr(f"CASE WHEN _is_seed = 1 THEN ({m} * _nv) DIV _ns ELSE 0 END")
+
+    return _iterate_rank(ed, base, seed_mass(1000000), seed_mass(150000), iterations)

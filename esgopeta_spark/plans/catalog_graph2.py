@@ -214,7 +214,7 @@ def graph_ham_stream_replay(spark, sf):
 
     out_cols = [f.name for f in OUTPUT_SCHEMA.fields]
 
-    def replay(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def replay(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         frames = list(handler(key, [pdf], _BatchState()))
         return frames[-1][out_cols] if frames else pd.DataFrame(columns=out_cols)
 

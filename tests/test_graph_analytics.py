@@ -1,6 +1,6 @@
 """Unit tests for GraphX-style analytics: degree-oriented triangle
-enumeration vs brute force, and the integer PageRank recurrence vs a
-pure-Python oracle."""
+enumeration vs brute force, and the integer PageRank recurrence (plain
+and personalized) vs a pure-Python oracle."""
 
 from __future__ import annotations
 
@@ -11,7 +11,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from esgopeta_spark.operators.graph_analytics import pagerank, triangle_counts
+from esgopeta_spark.operators.graph_analytics import pagerank, personalized_pagerank, triangle_counts
 
 
 def test_triangle_counts_match_bruteforce(spark):
@@ -41,24 +41,52 @@ def test_triangle_counts_ignores_direction_dups_loops(spark):
     assert got == {1: 1, 2: 1, 3: 1}
 
 
-def test_pagerank_matches_python_oracle(spark):
-    rng = random.Random(11)
-    edges = sorted({(rng.randrange(25), rng.randrange(25)) for _ in range(80)})
-    edges = [(a, b) for a, b in edges if a != b]
-    df = spark.createDataFrame(edges, "src int, dst int")
-    got = {r["node"]: r["rank_micro"] for r in pagerank(df, iterations=3).collect()}
-
+def _pagerank_oracle(edges, iterations, seeds=None):
+    """The integer recurrence in pure Python.  With ``seeds``, the
+    personalized variant: start and teleport mass (c·|V|) DIV |S| on the
+    distinct seeds that are nodes of the graph, 0 elsewhere."""
     nodes = sorted({a for a, _ in edges} | {b for _, b in edges})
     deg: dict[int, int] = {}
     for a, _ in edges:
         deg[a] = deg.get(a, 0) + 1
-    rank = {v: 1_000_000 for v in nodes}
-    for _ in range(3):
+    if seeds is None:
+        start = {v: 1_000_000 for v in nodes}
+        tele = {v: 150_000 for v in nodes}
+    else:
+        s = set(seeds) & set(nodes)
+        start = {v: (1_000_000 * len(nodes)) // len(s) if v in s else 0 for v in nodes}
+        tele = {v: (150_000 * len(nodes)) // len(s) if v in s else 0 for v in nodes}
+    rank = start
+    for _ in range(iterations):
         inc = {v: 0 for v in nodes}
         for a, b in edges:
             inc[b] += rank[a] // deg[a]
-        rank = {v: 150_000 + (85 * inc[v]) // 100 for v in nodes}
-    assert got == rank
+        rank = {v: tele[v] + (85 * inc[v]) // 100 for v in nodes}
+    return rank
+
+
+def test_pagerank_matches_python_oracle(spark):
+    """Both pageranks against the Python recurrence: a deduplicated
+    loop-free graph, and a raw edge list with duplicate edges (each
+    counts toward out-degree and carries its own contribution),
+    self-loops and dst-only (dangling) nodes; the personalized variant
+    with a seed list that repeats a seed and names a node outside the
+    graph (neither changes |S|)."""
+    rng = random.Random(11)
+    clean = sorted({(rng.randrange(25), rng.randrange(25)) for _ in range(80)})
+    clean = [(a, b) for a, b in clean if a != b]
+    raw = [(rng.randrange(20), rng.randrange(26)) for _ in range(90)]
+    raw += [(3, 3), (3, 3), (5, 21), (5, 21)]
+    assert len(set(raw)) < len(raw) and any(a == b for a, b in raw)
+    assert {b for _, b in raw} - {a for a, _ in raw}
+    seeds = [3, 7, 3, 999]
+    seeds_df = spark.createDataFrame([(s,) for s in seeds], "node int")
+    for edges in (clean, raw):
+        df = spark.createDataFrame(edges, "src int, dst int")
+        got = {r["node"]: r["rank_micro"] for r in pagerank(df, iterations=3).collect()}
+        assert got == _pagerank_oracle(edges, 3)
+        got = {r["node"]: r["rank_micro"] for r in personalized_pagerank(df, seeds_df).collect()}
+        assert got == _pagerank_oracle(edges, 3, seeds)
 
 
 def test_shortest_hops_vs_python_bfs(spark):

@@ -1669,11 +1669,12 @@ def test_reliable_checkpoint_mode_identical_results(spark, sf_dir, tmp_path):
     """The checkpoint="reliable" knob (r4 VERDICT task 4) must produce
     identical results to the default local mode while writing its blocks
     to the registered checkpoint dir (what survives executor loss on a
-    real cluster)."""
+    real cluster): BPE, connected components and both pageranks."""
     import os
 
     from esgopeta_spark.operators.bpe import bpe_train
     from esgopeta_spark.operators.dedup import dup_components
+    from esgopeta_spark.operators.graph_analytics import pagerank, personalized_pagerank
 
     spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
 
@@ -1694,6 +1695,20 @@ def test_reliable_checkpoint_mode_identical_results(spark, sf_dir, tmp_path):
 
     with pytest.raises(ValueError):
         dup_components(pairs, checkpoint="ram")
+
+    # both pageranks: one checkpoint dir each, so each must write its own blocks
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 1), (3, 4), (4, 4), (1, 2), (2, 5)], "src bigint, dst bigint"
+    )
+    seeds = spark.createDataFrame([(1,), (4,)], "node bigint")
+    for name, run in [
+        ("pagerank", lambda mode: pagerank(edges, checkpoint=mode)),
+        ("personalized_pagerank", lambda mode: personalized_pagerank(edges, seeds, checkpoint=mode)),
+    ]:
+        ckpt = tmp_path / f"ckpt_{name}"
+        spark.sparkContext.setCheckpointDir(str(ckpt))
+        assert sorted(run("reliable").collect()) == sorted(run("local").collect()), name
+        assert any(files for _, _, files in os.walk(ckpt)), f"{name}: reliable checkpoint produced no files"
 
 
 def test_pq_adc_recall_and_rerank(spark, sf_dir):
