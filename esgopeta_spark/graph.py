@@ -19,9 +19,11 @@ Design split: one overlay over one base.
   reference's one map probe per hop (gun/storage.go).  A base read by
   ``sources.read_quads(spark, path)`` carries its ``StoreSnapshot``, and
   the probe binary-searches the key's one bucket on the driver: no Spark
-  job, and the snapshot decodes each bucket once, so only its first
-  probe of a bucket reads a file.  Any other base (a derived or
-  in-memory frame) is probed with a Spark ``filter(...).limit(1)``.  Path prefixes resolve through
+  job.  The snapshot decodes each bucket once, from its one file written
+  in soul order, into Python lists, so only its first probe of a bucket
+  reads a file and every later one is a ``bisect`` of the bucket's
+  souls.  Any other base (a derived or in-memory frame) is probed
+  with a Spark ``filter(...).limit(1)``.  Path prefixes resolve through
   the memoized soul cache (gun/scoped.go:44-81).  A graph built only
   from puts has no base, so its point ops run no Spark job.
 - **bulk ops** (``traverse``, ``values_at``, ``edges``): fully

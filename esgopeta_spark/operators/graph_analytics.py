@@ -34,7 +34,14 @@ def _degree_edges(
 
     by_src = Window.partitionBy("src")
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-    ed = materialize(e.withColumn("_deg", F.count("*").over(by_src)), checkpoint, eager=False)
+    uncut = e.withColumn("_deg", F.count("*").over(by_src))
+    ed = materialize(uncut, checkpoint, eager=False)
+    # the job that fills the lazy checkpoint drops its lineage, the
+    # driver's one hold on the SQL metrics of ``uncut``'s plan, while tasks
+    # of a job AQE runs alongside still report to them; a JVM GC then logs
+    # "Failed to update accumulator" per metric and task.  Holding
+    # ``uncut`` for as long as ``ed`` and the ranks built on it keeps them.
+    ed._uncut = uncut
     return ed, ed.select(F.col("src").alias("node")).union(ed.select("dst")).distinct()
 
 
@@ -57,6 +64,7 @@ def _iterate_rank(
             "node",
             (teleport + F.expr("(85 * coalesce(_in, 0)) DIV 100")).cast("bigint").alias("rank_micro"),
         )
+    rank._uncut = ed._uncut  # see _degree_edges
     return rank
 
 

@@ -8,8 +8,9 @@ and nowhere else.
 
 - ``write_buckets`` is the one commit write: rows tagged by ``bucketed``
   with ``soul_bucket = crc32(soul) % n_buckets`` and hash-partitioned on
-  it go out in one ``partitionBy`` job, one directory (and one file) per
-  bucket.  The layout buys (a) point probes that read one bucket,
+  it go out in one ``partitionBy`` job, one directory (and one file,
+  sorted by soul and field) per bucket.  The layout buys (a) point
+  probes that read one bucket,
   (b) upserts that rewrite only the buckets a batch touches, and (c) a
   HAM merge that groups by the bucket too, so it reuses the commit's one
   exchange.  It does not co-locate joins: ``read_quads`` reads plain
@@ -28,12 +29,16 @@ and nowhere else.
   (``_store_snapshot`` on that exact object; derived frames have none).
   ``StoreSnapshot.rows`` is the point probe ``GunGraph`` runs instead of
   a Spark job.  Each snapshot decodes a bucket once, on its first probe:
-  it reads the bucket's live files on the driver with pyarrow, sorts the
-  rows by soul and keeps the table, so every later probe of that bucket
-  is a binary search with no file read (the reference's one map probe,
-  gun/storage.go).  The kept tables total at most ``PROBE_CACHE_BYTES``,
-  least recently used bucket evicted first; the cache belongs to the
-  snapshot object, so a path that is rewritten never serves stale rows.
+  it reads the bucket's live files on the driver with pyarrow, checks
+  that the rows are in soul order (they are, as written; a bucket that
+  is not is sorted) and keeps them as Python lists: the distinct souls,
+  where each soul's rows end, and one list per other quad column.  Every
+  later probe of that bucket is a ``bisect`` of the soul list and a dict
+  per matching row, with no file read and no Arrow call (the
+  reference's one map probe, gun/storage.go).  The kept lists total
+  at most ``PROBE_CACHE_BYTES``, counted as Python object bytes, least
+  recently used bucket evicted first; the cache belongs to the snapshot
+  object, so a path that is rewritten never serves stale rows.
   ``soul_bucket`` is the same bucket hash on the driver (Spark and
   ``zlib`` both ship CRC-32), so finding the bucket costs no Spark job
   either.
@@ -62,16 +67,18 @@ from __future__ import annotations
 import bisect
 import contextlib
 import json
-import operator
 import os
 import shutil
+import sys
 import tempfile
 import threading
 import zlib
 from collections import OrderedDict
 from dataclasses import dataclass, field as dc_field
 
+import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -83,9 +90,11 @@ DEFAULT_BUCKETS = 64
 MANIFEST = "_quads_meta.json"
 BUCKET_HASH = "crc32"  # the manifest's layout marker: how souls map to buckets
 PENDING_BUCKET = -1  # the partition value of a commit's pending set
-PROBE_CACHE_BYTES = 64 << 20  # decoded bucket bytes one StoreSnapshot keeps
+PROBE_CACHE_BYTES = 64 << 20  # Python bytes of the decoded buckets one StoreSnapshot keeps
 _COLUMNS = [f.name for f in QUAD_SCHEMA.fields]
-_as_py = operator.methodcaller("as_py")
+_SHARED = ["field", "value_type"]  # few distinct values: read as dictionaries, one str per value
+# the sizes of an empty list, str, float and int: the fixed part of each object
+_LIST_BYTES, _STR_BYTES, _FLOAT_BYTES, _INT_BYTES = map(sys.getsizeof, ([], "", 0.0, 1 << 10))
 
 
 def _bucket_expr(n_buckets: int):
@@ -115,9 +124,10 @@ class StoreSnapshot:
     seq: int
     buckets: dict  # bucket id (str) -> live directory relative to ``path``
     pending: str | None  # pending set directory relative to ``path``, or None
-    # bucket id -> its decoded rows sorted by soul, least recently used
-    # first; it lives and dies with this object, never keyed by path,
-    # because a path can be removed and rewritten under the same names
+    # bucket id -> (its lists, see _sorted_bucket, and their bytes), least
+    # recently used first; it lives and dies with this object, never
+    # keyed by path, because a path can be removed and rewritten under
+    # the same names
     _decoded: OrderedDict = dc_field(default_factory=OrderedDict, init=False, repr=False, compare=False)
     _lock: threading.Lock = dc_field(default_factory=threading.Lock, init=False, repr=False, compare=False)
 
@@ -153,52 +163,110 @@ class StoreSnapshot:
 
     def rows(self, soul: str, field: str | None = None) -> list[dict]:
         """The snapshot's quad rows of ``soul`` (and ``field``): a binary
-        search of the soul's bucket, decoded and sorted by soul on its
+        search of the soul's bucket, decoded into Python lists on its
         first probe in this snapshot — no Spark job, and after that first
-        probe no file read.  Only the matching rows become dicts.  A
-        bucket the manifest does not list holds no rows."""
+        probe no file read and no Arrow call.  Only the matching rows
+        become dicts.  A bucket the manifest does not list holds no
+        rows."""
         bucket = str(soul_bucket(soul, self.n_buckets))
         if bucket not in self.buckets:
             return []
-        table = self._sorted_bucket(bucket)
-        souls, fields, cols = table.column("soul"), table.column("field"), table.columns
-        # Arrow sorts strings by their UTF-8 bytes, which is Python's code
-        # point order (QUAD_SCHEMA's soul holds no null)
-        lo = bisect.bisect_left(souls, soul, key=_as_py)
-        hi = bisect.bisect_right(souls, soul, lo, key=_as_py)
+        souls, ends, columns = self._sorted_bucket(bucket)
+        k = bisect.bisect_left(souls, soul)
+        if k == len(souls) or souls[k] != soul:
+            return []
+        fields = columns["field"]
         return [
-            {name: col[i].as_py() for name, col in zip(_COLUMNS, cols)}
-            for i in range(lo, hi)
-            if field is None or fields[i].as_py() == field
+            {"soul": soul, **{name: values[i] for name, values in columns.items()}}
+            for i in range(ends[k - 1] if k else 0, ends[k])
+            if field is None or fields[i] == field
         ]
 
-    def _sorted_bucket(self, bucket: str) -> pa.Table:
-        """``bucket``'s live rows sorted by soul, in one chunk: decoded on
-        first use, then kept, least recently used evicted first, while the
-        kept tables total at most ``PROBE_CACHE_BYTES``."""
+    def _sorted_bucket(self, bucket: str) -> tuple[list, list, dict[str, list]]:
+        """``bucket``'s live rows sorted by soul, as Python lists: its
+        distinct souls, the row each soul's run ends before, and one list
+        per other quad column.  Decoded on first use, then kept, least
+        recently used evicted first, while the kept lists total at most
+        ``PROBE_CACHE_BYTES``.  ``write_buckets`` writes each bucket's one
+        file in soul order, so decoding only checks the order; a bucket
+        that is not in order (several files, or a store written before
+        the files were sorted) is sorted here."""
         with self._lock:
-            table = self._decoded.get(bucket)
-            if table is not None:
+            kept = self._decoded.get(bucket)
+            if kept is not None:
                 self._decoded.move_to_end(bucket)
-                return table
+                return kept[0]
             # one ParquetFile read per data file: half the cost of a
             # pq.read_table of the directory, which builds a dataset
             bucket_dir, parts = os.path.join(self.path, self.buckets[bucket]), []
             for name in sorted(os.listdir(bucket_dir)):
                 if not name.startswith((".", "_")):  # checksum and marker files
-                    with pq.ParquetFile(os.path.join(bucket_dir, name)) as f:
-                        parts.append(f.read(columns=_COLUMNS))
-            table = self._decoded[bucket] = pa.concat_tables(parts).sort_by("soul").combine_chunks()
-            kept = sum(t.nbytes for t in self._decoded.values())
-            while kept > PROBE_CACHE_BYTES:
-                kept -= self._decoded.popitem(last=False)[1].nbytes
-            return table
+                    with pq.ParquetFile(os.path.join(bucket_dir, name), read_dictionary=_SHARED) as f:
+                        parts.append(f.read(columns=_COLUMNS, use_threads=False))
+            table = pa.concat_tables(parts)
+            # Arrow compares strings by their UTF-8 bytes, which is Python's
+            # code point order (QUAD_SCHEMA's soul holds no null)
+            souls = table.column("soul")
+            if pc.any(pc.less(souls[1:], souls[:-1])).as_py():
+                table = table.sort_by("soul")
+            runs = pc.run_end_encode(table.column("soul").combine_chunks())
+            arrays = {name: table.column(name) for name in _COLUMNS if name != "soul"}
+            kept = _pylist(runs.values), _pylist(runs.run_ends), {n: _pylist(a) for n, a in arrays.items()}
+            self._decoded[bucket] = kept, _kept_bytes(runs.values, runs.run_ends, *arrays.values())
+            total = sum(n for _, n in self._decoded.values())
+            while total > PROBE_CACHE_BYTES:
+                total -= self._decoded.popitem(last=False)[1][1]
+            return kept
 
     @property
     def cached_bytes(self) -> int:
-        """Arrow bytes of the buckets this snapshot keeps decoded."""
+        """Bytes of the Python lists this snapshot keeps decoded, as
+        ``_kept_bytes`` counts them."""
         with self._lock:
-            return sum(t.nbytes for t in self._decoded.values())
+            return sum(n for _, n in self._decoded.values())
+
+
+def _pylist(array: pa.Array | pa.ChunkedArray) -> list:
+    """``array`` as a Python list, through numpy: many times faster than
+    ``to_pylist``, which builds one Arrow scalar per cell.  A dictionary
+    column (``_SHARED``, no nulls) makes one str per distinct value and
+    shares it; numpy turns a null double into NaN, so only the valid
+    cells are made floats and the others are None."""
+    if pa.types.is_dictionary(array.type):
+        values = []
+        for chunk in array.chunks:
+            values += chunk.dictionary.to_numpy(zero_copy_only=False)[chunk.indices.to_numpy()].tolist()
+        return values
+    values = array.to_numpy(zero_copy_only=False)
+    if array.null_count and pa.types.is_floating(array.type):
+        valid, numbers = array.is_valid().to_numpy(zero_copy_only=False), values
+        values = np.full(len(array), None, dtype=object)
+        values[valid] = numbers[valid]
+    return values.tolist()
+
+
+def _kept_bytes(*arrays: pa.Array | pa.ChunkedArray) -> int:
+    """The Python bytes of the lists ``_pylist`` makes of ``arrays``,
+    counted from the Arrow arrays without a pass over the cells: each
+    list's pointer array; per non-null cell an int or a float object;
+    and per non-null string (per dictionary value, in a ``_SHARED``
+    column) an empty str's size, plus the Arrow bytes of the strings
+    (their UTF-8 text and offsets).  True, False and None are shared
+    objects and count nothing.  On the seed store's buckets this reads
+    about 9 % above what tracemalloc sees."""
+    total = 0
+    for array in arrays:
+        cells = len(array) - array.null_count
+        total += _LIST_BYTES + 8 * len(array)
+        if pa.types.is_dictionary(array.type):
+            total += sum(len(c.dictionary) * _STR_BYTES + c.dictionary.nbytes for c in array.chunks)
+        elif pa.types.is_string(array.type):
+            total += cells * _STR_BYTES + array.nbytes
+        elif pa.types.is_floating(array.type):
+            total += cells * _FLOAT_BYTES
+        elif pa.types.is_integer(array.type):
+            total += cells * _INT_BYTES
+    return total
 
 
 def load_manifest(path: str) -> dict | None:
@@ -270,9 +338,12 @@ def write_buckets(
 ) -> tuple[dict[str, str], str | None]:
     """Stage a commit into ``<path>/<commit_rel>/data`` with ONE
     ``partitionBy`` write job: the quad rows of ``tagged`` (a ``bucketed``
-    frame) into one directory per soul bucket, and the ``pending`` quad
-    rows, as they are and in one file, into the ``soul_bucket=-1``
-    directory, a value no bucket takes.  Returns the manifest entries:
+    frame) into one directory per soul bucket, each bucket's one file
+    sorted by (soul, field) so a point probe decodes it without sorting,
+    and the ``pending`` quad rows, unmerged and in one file, into the
+    ``soul_bucket=-1`` directory, a value no bucket takes.  The sort runs
+    inside the write's tasks: no exchange, and the write adds no sort of
+    its own.  Returns the manifest entries:
     bucket -> directory relative to ``path``, and the pending directory
     (None when no row was pending)."""
     data_rel = f"{commit_rel}/data"
@@ -280,6 +351,9 @@ def write_buckets(
     if pending is not None:
         tag = F.lit(PENDING_BUCKET).cast("bigint").alias("soul_bucket")
         tagged = tagged.unionByName(pending.select(*_COLUMNS, tag).coalesce(1))
+    # sorted within each task, and soul_bucket first, so the planned
+    # write's own sort on the partition column is already satisfied
+    tagged = tagged.sortWithinPartitions("soul_bucket", "soul", "field")
     tagged.write.mode("overwrite").partitionBy("soul_bucket").parquet(data_dir)
     entries = {
         d.split("=", 1)[1]: f"{data_rel}/{d}" for d in os.listdir(data_dir) if d.startswith("soul_bucket=")

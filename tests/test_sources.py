@@ -175,6 +175,41 @@ def test_store_probe_equals_a_selection_of_the_rows_written(rows, n_buckets, ext
             assert _canon(snap.rows(soul, field)) == want(soul, field), (soul, field)
 
 
+def test_store_probe_matches_spark_on_a_store_spark_wrote(spark, tmp_path):
+    """Over a store write_quads wrote (each bucket one file in soul order),
+    rows(soul) and rows(soul, field), cold and then warm, equal Spark's own
+    read of the store value for value, compared by repr so -0.0 keeps its
+    sign: null number, bool and string cells, -0.0, 10**20, a U+2028
+    string, and non-ASCII souls, a BMP one above the surrogate range and a
+    4-byte UTF-8 one among them.  A warm probe reads no file."""
+    values = [None, True, False, -0.0, 0.0, 10**20, 1.5, "", "a\u2028b", "ü", {"#": "日本"}]
+    souls = ["a", "z", "ü", "日本", "\uff21", "\U0001f600", "s\u2028"]
+    rows = [
+        {"soul": s, "field": f"f{k}", **encode_value(v), "state": float(k)} for s in souls for k, v in enumerate(values)
+    ]
+    path = str(tmp_path / "store")
+    write_quads(spark.createDataFrame(rows, QUAD_SCHEMA), path, n_buckets=2)
+    read = [r.asDict() for r in read_quads(spark, path).collect()]
+    assert len(read) == len(rows)
+    assert any(r["value_number"] == 0 and repr(r["value_number"]) == "-0.0" for r in read)
+
+    def canon(rs):
+        return sorted(repr(tuple(r[c] for c in _ARROW_QUADS.names)) for r in rs)
+
+    probes = [(s, f) for s in [*souls, "absent"] for f in [None, "f0", "f3", "f5", "f8", "absent"]]
+    want = {(s, f): canon(r for r in read if r["soul"] == s and f in (None, r["field"])) for s, f in probes}
+    snap = StoreSnapshot.open(path)
+    for rel in snap.buckets.values():
+        (data,) = [n for n in os.listdir(os.path.join(path, rel)) if n.endswith(".parquet")]
+        keys = [(k["soul"], k["field"]) for k in pq.read_table(os.path.join(path, rel, data)).to_pylist()]
+        assert keys == sorted(keys), rel
+    for soul, field in probes:
+        assert canon(snap.rows(soul, field)) == want[soul, field], (soul, field)
+    shutil.rmtree(path)
+    for soul, field in probes:
+        assert canon(snap.rows(soul, field)) == want[soul, field], (soul, field)
+
+
 def test_snapshot_cache_is_scoped_to_its_snapshot(spark, tmp_path):
     """A fresh read_quads serves only the new rows after write_quads over
     the path, after ham_upsert_batch, and after rmtree plus a rewrite that

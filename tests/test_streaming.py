@@ -429,10 +429,13 @@ def test_upsert_crash_before_publish_leaves_consistent_snapshot(spark, tmp_path,
 def test_upsert_commit_is_one_exchange_and_one_write(spark, tmp_path, monkeypatch):
     """One upsert commit: the merge frame shuffles once (hash on
     soul_bucket; the per-bucket HAM aggregate reuses that partitioning),
-    each bucket it rewrites holds one parquet file, untouched buckets keep
-    their old commit, and the deferred rows are staged in the same commit
-    directory as the buckets."""
+    each bucket it rewrites holds one parquet file, in (soul, field)
+    order, and the write job's plan adds no exchange and no second sort to
+    it; untouched buckets keep their old commit, and the deferred rows are
+    staged in the same commit directory as the buckets."""
     import glob
+
+    import pyarrow.parquet as pq
 
     from esgopeta_spark.sources import io as sources_io
     from esgopeta_spark.sources.io import load_manifest, soul_bucket
@@ -453,19 +456,37 @@ def test_upsert_commit_is_one_exchange_and_one_write(spark, tmp_path, monkeypatc
     monkeypatch.setattr(sources_io, "write_buckets", capture)
     souls = [f"s{i}" for i in range(0, 40, 9)]
     b2 = [q(s, "f", "new", 500, msg=f"n{s}") for s in souls] + [q("s3", "g", "later", 2_000_000, msg="x")]
+    b2 += [q(s, "e", 1, 500, msg=f"e{s}") for s in souls]  # a second field, after "f" in the batch
     upsert.ham_upsert_batch(spark, spark.createDataFrame(b2, UPDATE_SCHEMA), store, n_buckets=8, as_of_ms=as_of)
 
     (merged,) = seen
     plan = merged._jdf.queryExecution().executedPlan().toString()
     exchanges = [line for line in plan.splitlines() if line.lstrip(" :+-|").startswith("Exchange")]
     assert len(exchanges) == 1, plan
+    merge_sorts = [line for line in plan.splitlines() if line.lstrip(" :+-|*(0123456789)").startswith("Sort ")]
+
+    # the write job as executed (AQE's final plan): the bucket order adds
+    # one sort and no exchange, and the planned write no sort of its own
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    it, write_plan = spark._jsparkSession.sharedState().statusStore().executionsList().iterator(), None
+    while it.hasNext():
+        described = it.next().physicalPlanDescription()
+        if "InsertIntoHadoopFsRelationCommand" in described:
+            write_plan = described
+    final = write_plan.split("== Final Plan ==")[1].split("== Initial Plan ==")[0]
+    nodes = [line.lstrip(" :+-|*").split(" ")[0] for line in final.splitlines()]
+    assert nodes.count("Exchange") == 1 and nodes.count("Sort") == len(merge_sorts) + 1, write_plan
 
     manifest = load_manifest(store)
     rewritten = {b for b, rel in manifest["buckets"].items() if rel.startswith("commits/c000001/")}
     assert rewritten == {str(soul_bucket(s, 8)) for s in souls}
     assert len(manifest["buckets"]) > len(rewritten)  # the others were not rewritten
     for rel in manifest["buckets"].values():
-        assert len(glob.glob(os.path.join(store, rel, "*.parquet"))) == 1, rel
+        files = glob.glob(os.path.join(store, rel, "*.parquet"))
+        assert len(files) == 1, rel
+        if rel.startswith("commits/c000001/"):
+            keys = pq.read_table(files[0], columns=["soul", "field"]).to_pylist()
+            assert keys == sorted(keys, key=lambda k: (k["soul"], k["field"])), rel
     assert manifest["pending"] == "commits/c000001/data/soul_bucket=-1"
     assert [(r["soul"], r["field"]) for r in upsert.read_pending(spark, store).collect()] == [("s3", "g")]
 

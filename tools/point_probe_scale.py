@@ -4,15 +4,18 @@ For each scale (a multiple of ``GraphSpec.n_users``) it generates the
 perfbench seed store with ``perfbench/gen.py``, keeps one bucket's share
 of it (the rows whose soul ``soul_bucket`` puts in bucket 0 of
 ``GraphSpec.n_buckets``), and writes that bucket with pyarrow as the one
-live bucket of a manifest store.  Then, per scale:
+live bucket of a manifest store, sorted by (soul, field) as
+``write_buckets`` writes it.  Then, per scale:
 
 - ``filter_ms``: one ``pq.read_table`` of the bucket with row filters on
   the soul, which is what a probe cost before buckets were cached;
 - ``cold_ms``: the first ``rows(soul)`` of a fresh ``StoreSnapshot``
-  (read, sort and search the bucket), the median of three snapshots;
+  (read and decode the bucket, check its order, search it), the median
+  of three snapshots;
 - ``warm_ms``: the median ``rows(soul)`` of random souls of the bucket
   once it is cached;
-- ``cached_kb``: the Arrow bytes the snapshot keeps for the bucket.
+- ``cached_kb``: the bytes the snapshot counts for the bucket it keeps
+  decoded (``StoreSnapshot.cached_bytes``).
 
 The bucket file sits in the page cache after it is written, so no
 figure includes a disk read.  The whole seed store is generated in
@@ -44,10 +47,11 @@ BUCKET = 0
 
 
 def write_bucket(path: str, spec: gen.GraphSpec, seed: int) -> list[str]:
-    """Write bucket ``BUCKET`` of the seed store at ``path``; returns its souls."""
+    """Write bucket ``BUCKET`` of the seed store at ``path`` in (soul,
+    field) order, as ``write_buckets`` does; returns its souls."""
     rows = gen.seed_quads(spec, seed)
     mine = {s for s in {r[0] for r in rows} if soul_bucket(s, spec.n_buckets) == BUCKET}
-    rows = [r for r in rows if r[0] in mine]
+    rows = sorted((r for r in rows if r[0] in mine), key=lambda r: (r[0], r[1]))
     rel = f"commits/c000000/data/soul_bucket={BUCKET}"
     os.makedirs(os.path.join(path, rel))
     gen.write_table(gen.to_table(rows), os.path.join(path, rel, "part-0.parquet"))
