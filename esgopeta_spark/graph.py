@@ -10,14 +10,17 @@ creation).  A path ``root -> f1 -> f2`` is a lazy chain of segments
 Design split: one overlay over one base.
 
 - ``_base`` is the snapshot DataFrame (one row per key), or None for an
-  empty graph.  ``_pending`` is the overlay: the driver-side list of put
-  rows not in ``_base``.  HAM merge is a semilattice join (ham.py), so
-  folding the overlay over the base at read time is exact.
+  empty graph.  ``_pending`` is the overlay: the driver-side winner map
+  ``(soul, field)`` → put row that ``ham.ham_fold`` folds the graph's
+  puts into; each ``put`` folds into a copy for the graph it returns.
+  HAM merge is a semilattice join (ham.py), so folding the overlay over
+  the base at read time is exact.
 - **point ops** (``fetch_one``, ``soul_of``, ``put``, ``node``):
-  genuinely single-key operations.  A lookup is the HAM max of the
-  overlay's rows for the key and ONE probe of ``_base`` — the
-  reference's one map probe per hop (gun/storage.go).  A base read by
-  ``sources.read_quads(spark, path)`` carries its ``StoreSnapshot``, and
+  genuinely single-key operations.  A lookup is one probe of the
+  overlay map and ONE probe of ``_base``, the winner under
+  ``ham.ham_key`` — the reference's one map probe per hop
+  (gun/storage.go).  A base read by ``sources.read_quads(spark, path)``
+  carries its ``StoreSnapshot``, and
   the probe binary-searches the key's one bucket on the driver: no Spark
   job.  The snapshot decodes each bucket once, from its one file written
   in soul order, into Python lists, so only its first probe of a bucket
@@ -28,7 +31,8 @@ Design split: one overlay over one base.
   from puts has no base, so its point ops run no Spark job.
 - **bulk ops** (``traverse``, ``values_at``, ``edges``): fully
   distributed, expressed as iterated equi-joins on ``quads`` — ``_base``
-  itself, or ONE ``ham_merge`` of ``_base`` and the overlay.  The
+  itself, ONE ``ham_merge`` of ``_base`` and the overlay, or, with no
+  base, the overlay's winners as a local scan.  The
   relation slice is one edge view per graph (``edges``), materialized
   by the first job that reads it: every later traverse hop and
   ``pagerank(g.edges())`` reuse its blocks instead of scanning and
@@ -44,15 +48,9 @@ from typing import Any, Iterable, Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from esgopeta_spark.ham import empty_quads, ham_merge, quads_frame
+from esgopeta_spark.ham import empty_quads, ham_fold, ham_key, ham_merge, quads_frame
 from esgopeta_spark.soul import SoulGen
-from esgopeta_spark.types import (
-    VALUE_COLUMNS,
-    VALUE_RELATION,
-    decode_value,
-    encode_value,
-    value_json_py,
-)
+from esgopeta_spark.types import QUAD_SCHEMA, VALUE_COLUMNS, VALUE_RELATION, decode_value, encode_value
 
 
 class ErrNotObject(Exception):
@@ -80,28 +78,13 @@ class PutResult:
     updates: list[dict] = dc_field(default_factory=list)  # the would-be wire message rows
 
 
-def _ham_max(rows):
-    """HAM winner of quad rows: the max by ``(state, value_json)``, the
-    total order ``ham_merge`` uses (ham.py docstring).  ``value_json_py``
-    ≡ ``value_json_col`` is pinned by tests."""
-    return max(rows, key=lambda r: (r["state"], value_json_py(r)), default=None)
-
-
-def _ham_fold(rows) -> dict[tuple[str, str], Any]:
-    """HAM winner per ``(soul, field)`` of driver-side quad rows."""
-    by_key: dict[tuple[str, str], list] = {}
-    for r in rows:
-        by_key.setdefault((r["soul"], r["field"]), []).append(r)
-    return {k: _ham_max(rs) for k, rs in by_key.items()}
-
-
 class GunGraph:
     def __init__(self, spark: SparkSession, quads: DataFrame | None = None, soul_gen: SoulGen | None = None):
         self.spark = spark
         self._base = quads  # snapshot, one row per key; None = empty graph
         # the store snapshot read_quads resolved for exactly this frame
         self._snapshot = getattr(quads, "_store_snapshot", None)
-        self._pending: list[dict] = []  # the overlay: put rows not in _base
+        self._pending: dict[tuple[str, str], dict] = {}  # the overlay: put winners over _base
         self._merged: DataFrame | None = None  # cached quads of a non-empty overlay
         self._edges: DataFrame | None = None  # cached edges(), built on first use
         self.soul_gen = soul_gen or SoulGen()
@@ -109,14 +92,16 @@ class GunGraph:
 
     @property
     def quads(self) -> DataFrame:
-        """Merged snapshot (winner per key): ``_base`` itself, or ONE
-        ``ham_merge`` of ``_base`` and the overlay, cached per (immutable)
-        graph — however long the put chain, the plan never nests."""
+        """Merged snapshot (winner per key): ``_base`` itself, ONE
+        ``ham_merge`` of ``_base`` and the overlay, or with no base the
+        overlay's winners alone (a local scan, no aggregate); cached per
+        (immutable) graph — however long the put chain, the plan never
+        nests."""
         if not self._pending:
             return self._base if self._base is not None else empty_quads(self.spark)
         if self._merged is None:
-            overlay = quads_frame(self.spark, self._pending)
-            self._merged = ham_merge(overlay if self._base is None else self._base.unionByName(overlay))
+            overlay = quads_frame(self.spark, self._pending.values())
+            self._merged = overlay if self._base is None else ham_merge(self._base.unionByName(overlay))
         return self._merged
 
     # ------------------------------------------------------------------
@@ -126,7 +111,7 @@ class GunGraph:
     @classmethod
     def from_rows(cls, spark: SparkSession, rows: Iterable[dict], **kw) -> "GunGraph":
         """Snapshot graph of driver-side quad rows, HAM-folded on the driver."""
-        return cls(spark, quads_frame(spark, _ham_fold(rows).values()), **kw)
+        return cls(spark, quads_frame(spark, ham_fold(rows).values()), **kw)
 
     # ------------------------------------------------------------------
     # point reads (reference A1-A5)
@@ -144,10 +129,11 @@ class GunGraph:
         return self._base.filter((F.col("soul") == soul) & (F.col("field") == field)).limit(1).collect()
 
     def _lookup(self, soul: str, field: str):
-        """HAM max of the overlay's rows for the key and one probe of
+        """HAM winner of the overlay's row for the key and one probe of
         ``_base``; no Spark job unless the base is a derived frame."""
-        rows = [r for r in self._pending if r["soul"] == soul and r["field"] == field]
-        return _ham_max(rows + self._probe(soul, field))
+        rows = self._probe(soul, field)
+        held = self._pending.get((soul, field))
+        return max(rows if held is None else [held, *rows], key=ham_key, default=None)
 
     def soul_of(self, *path: str) -> str | None:
         """Resolve a path prefix to a node soul, memoized (gun/scoped.go:44-81).
@@ -229,7 +215,7 @@ class GunGraph:
         # the souls this put creates never enter this graph's cache
         g = GunGraph(self.spark, self._base, soul_gen=self.soul_gen)
         g._soul_cache = dict(self._soul_cache)
-        g._pending = self._pending
+        g._pending = self._pending  # read-only here: the fold below copies it
         new_quads: list[dict] = []
         parent = path[0]  # top-level root: soul == field name
         for i in range(1, len(path) - 1):
@@ -245,7 +231,7 @@ class GunGraph:
                 g._soul_cache[prefix] = soul
             parent = soul
         new_quads.append({"soul": parent, "field": path[-1], **encode_value(value), "state": state})
-        g._pending = self._pending + new_quads
+        g._pending = ham_fold(new_quads, self._pending)
         return PutResult(graph=g, updates=new_quads)
 
     # ------------------------------------------------------------------
@@ -308,10 +294,11 @@ class GunGraph:
         return roots.join(vals, roots["soul"] == vals["_vsoul"], "left").drop("_vsoul")
 
     def node(self, soul: str) -> dict[str, Any]:
-        """Record view of one node: the HAM max per field of the overlay's
-        rows and one probe of ``_base`` (a point read, like ``_lookup``)."""
-        rows = [r for r in self._pending if r["soul"] == soul] + self._probe(soul)
-        return {f: decode_value(r) for (_, f), r in _ham_fold(rows).items()}
+        """Record view of one node: the HAM winner per field of the
+        overlay's rows and one probe of ``_base`` (a point read, like
+        ``_lookup``)."""
+        rows = [r for (s, _), r in self._pending.items() if s == soul] + self._probe(soul)
+        return {f: decode_value(r) for (_, f), r in ham_fold(rows).items()}
 
     # ------------------------------------------------------------------
     # scoped chain API (reference A1: gun/scoped.go) + live subscribe (A6)
@@ -327,11 +314,15 @@ class GunGraph:
         winning updates for one (soul, field), driven by the update stream.
 
         Resolves the path prefix against the current snapshot (the
-        reference resolves souls before subscribing too), then filters the
-        stream to the key and applies the stateful HAM merge so only
-        IsImmediateUpdate transitions are emitted.  The caller owns the
-        writeStream (sink, trigger, lifecycle) — stopping the query is
-        FetchDone (A9).
+        reference resolves souls before subscribing too), filters the
+        stream to the key and applies the stateful HAM merge started from
+        the key's stored winner (a point lookup: no Spark job over a store
+        snapshot).  The first micro-batch that carries the key emits its
+        winner — the stored value when every update loses, as the
+        reference emits the local value first (gun/scoped_fetch.go:104-106)
+        — and later ones emit only IsImmediateUpdate transitions.  The
+        caller owns the writeStream (sink, trigger, lifecycle) — stopping
+        the query is FetchDone (A9).
         """
         from esgopeta_spark.streaming.ham_stream import streaming_ham_merge
 
@@ -343,7 +334,9 @@ class GunGraph:
         key_filtered = updates_stream.filter(
             (F.col("soul") == parent) & (F.col("field") == path[-1])
         )
-        return streaming_ham_merge(key_filtered)
+        row = self._lookup(parent, path[-1])
+        seed = {} if row is None else {(parent, path[-1]): {c: row[c] for c in QUAD_SCHEMA.names}}
+        return streaming_ham_merge(key_filtered, seed)
 
 
 class Scoped:

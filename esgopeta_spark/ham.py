@@ -19,6 +19,13 @@ no custom state.  Deferral (gun/storage.go:107-117) is an *eligibility
 filter* applied before the merge: rows with ``state > as_of`` are
 carried to a future merge rather than entering this one.
 
+The Python side of that order lives only here: ``ham_key`` is the twin
+of ``_WINNER_SQL``'s key, and ``ham_fold`` folds driver-side quad rows
+into a ``(soul, field)`` → winner map.  ``GunGraph``'s put overlay and
+the live-Fetch handler (``streaming.ham_stream``) fold with them, and
+``conflict_resolve`` ranks equal-state values by the same
+``value_json_py``.
+
 Scale notes: ``ham_merge`` is one hash aggregate (one shuffle on the
 key, map-side partials); reading a bucketed store does not remove that
 shuffle, but an upsert commit's merge reuses the exchange that writes
@@ -28,7 +35,6 @@ codegen'd string expression.
 
 from __future__ import annotations
 
-import json
 from dataclasses import dataclass
 from typing import Any
 
@@ -43,6 +49,7 @@ from esgopeta_spark.types import (
     VALUE_NUMBER,
     VALUE_RELATION,
     VALUE_STRING,
+    encode_value,
     value_json_py,
 )
 
@@ -81,8 +88,8 @@ def conflict_resolve(
         return OLDER_HISTORICAL
     if existing_state < new_state:
         return NEWER_UPDATE
-    existing_json = _py_value_json(existing_val)
-    new_json = _py_value_json(new_val)
+    existing_json = value_json_py(encode_value(existing_val))
+    new_json = value_json_py(encode_value(new_val))
     if existing_json == new_json:
         return SAME_KEEP
     if existing_json.encode("utf-8") < new_json.encode("utf-8"):
@@ -90,14 +97,25 @@ def conflict_resolve(
     return SAME_KEEP
 
 
-def _py_value_json(value: Any) -> str:
-    if value is None:
-        return "null"
-    if isinstance(value, bool):
-        return "true" if value else "false"
-    if isinstance(value, dict) and set(value) == {"#"}:
-        return '{"#":' + json.dumps(value["#"], ensure_ascii=False) + "}"
-    return json.dumps(value, ensure_ascii=False, separators=(",", ":"))
+def ham_key(row) -> tuple[float, str]:
+    """The HAM total order of a quad row, ``(state, value_json)``: the
+    Python twin of ``_WINNER_SQL``'s key (``value_json_py`` ≡
+    ``value_json_col`` is pinned by tests).  Python compares ``str`` by
+    code point, which is the UTF-8 byte order Spark compares by."""
+    return row["state"], value_json_py(row)
+
+
+def ham_fold(rows, winners=None) -> dict[tuple[str, str], Any]:
+    """Fold quad rows into a ``(soul, field)`` → winner map under
+    ``ham_key``; ``winners`` is the map to start from, copied, never
+    changed.  A row that ties its key's winner keeps the winner."""
+    out = dict(winners or {})
+    for r in rows:
+        key = (r["soul"], r["field"])
+        held = out.get(key)
+        if held is None or ham_key(r) > ham_key(held):
+            out[key] = r
+    return out
 
 
 # ---------------------------------------------------------------------------
@@ -241,6 +259,8 @@ def empty_quads(spark) -> DataFrame:
 
 __all__ = [
     "conflict_resolve",
+    "ham_fold",
+    "ham_key",
     "ham_merge",
     "ham_apply_updates",
     "split_deferred",

@@ -198,7 +198,7 @@ def graph_fetch_path(spark, sf):
 def graph_ham_stream_replay(spark, sf):
     from esgopeta_spark.streaming.ham_stream import OUTPUT_SCHEMA, _make_handler
 
-    handler = _make_handler(False)
+    handler = _make_handler()
 
     class _BatchState:
         """GroupState shim: one cold-start micro-batch over the whole log."""
@@ -207,9 +207,6 @@ def graph_ham_stream_replay(spark, sf):
         get = None
 
         def update(self, st):
-            pass
-
-        def setTimeoutDuration(self, ms):
             pass
 
     out_cols = [f.name for f in OUTPUT_SCHEMA.fields]

@@ -3,12 +3,17 @@
 
 from __future__ import annotations
 
+import math
+
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from esgopeta_spark.graph import ErrNotObject, GunGraph
+from esgopeta_spark.ham import IMMEDIATE_UPDATE, conflict_resolve
 from esgopeta_spark.soul import SoulGen
-from esgopeta_spark.types import QUAD_SCHEMA, decode_value, encode_value
+from esgopeta_spark.types import QUAD_SCHEMA, decode_value, encode_value, value_json_py
 
 
 def fresh_graph(spark):
@@ -247,6 +252,86 @@ def test_store_point_ops_run_no_spark_job(spark, tmp_path):
     assert jobs("derived-point-ops", base.filter(F.lit(True))) > 0
 
 
+def _resolve(model, rows):
+    """Fold quad rows into ``model`` ((soul, field) → (value, state)) one
+    at a time through the reference's decision table."""
+    for r in rows:
+        key, v = (r["soul"], r["field"]), decode_value(r)
+        if key not in model or conflict_resolve(*model[key], v, r["state"], math.inf) in IMMEDIATE_UPDATE:
+            model[key] = (v, r["state"])
+    return model
+
+
+def _canon(value, state=None):
+    """A value as its HAM rank (value_json text), which tells -0.0 from 0
+    and 1.5 from "1.5"."""
+    return value_json_py(encode_value(value)), state
+
+
+# every GUN value type; few values and states, so equal-state ties are common
+_LEAF_VALUES = st.one_of(
+    st.none(),
+    st.booleans(),
+    st.sampled_from([0, -0.0, 1, 1.5, -2, 10**20, 1e20]),
+    st.floats(allow_nan=False, allow_infinity=False, width=32),
+    st.text(alphabet="ab~\x7f\u2028日\"", max_size=3),
+    st.sampled_from(["1.5", "true", "null"]),
+    st.builds(lambda s: {"#": s}, st.sampled_from(["s1", "s2", "日"])),
+)
+_LEAF_PUTS = st.lists(
+    st.tuples(st.sampled_from(["a", "b", "c"]), _LEAF_VALUES, st.sampled_from([1.0, 2.0, 3.0])),
+    min_size=1,
+    max_size=10,
+)
+
+
+def _check_leaf_puts(g, model, puts):
+    """Put each leaf of ``puts`` under root/n; after each, fetch_one and
+    node equal the sequential conflict_resolve fold of every quad so far."""
+    for field, value, state in puts:
+        res = g.put(["root", "n", field], value, state=state)
+        g = res.graph
+        _resolve(model, res.updates)
+        soul = g.soul_of("root", "n")
+        for f in "abc":
+            r, want = g.fetch_one("root", "n", f), model.get((soul, f))
+            assert (_canon(r.value, r.state) if r.value_exists else None) == (want and _canon(*want))
+        assert {f: _canon(v) for f, v in g.node(soul).items()} == {
+            f: _canon(v) for (s, f), (v, _) in model.items() if s == soul
+        }
+    return g
+
+
+def test_leaf_puts_equal_sequential_conflict_resolve(spark, tmp_path):
+    """Random leaf put sequences, ties at equal state and every value
+    type, over a graph with no base and over a store-base graph: reads
+    equal a sequential conflict_resolve fold.  With no base, quads is that
+    fold too, a local scan with no aggregate."""
+    base_rows = [
+        {"soul": "root", "field": "n", **encode_value({"#": "n1"}), "state": 1.0},
+        {"soul": "n1", "field": "a", **encode_value("x"), "state": 2.0},
+        {"soul": "n1", "field": "b", **encode_value(7), "state": 2.0},
+    ]
+    base = _store_base(spark, tmp_path, base_rows)
+
+    @given(_LEAF_PUTS)
+    @settings(max_examples=60, deadline=None)
+    def no_base(puts):
+        model = {}
+        g = _check_leaf_puts(fresh_graph(spark), model, puts)
+        got = {(r["soul"], r["field"]): _canon(decode_value(r), r["state"]) for r in g.quads.collect()}
+        assert got == {k: _canon(*v) for k, v in model.items()}
+        assert "Aggregate" not in g.quads._jdf.queryExecution().logical().toString()
+
+    @given(_LEAF_PUTS)
+    @settings(max_examples=60, deadline=None)
+    def store_base(puts):
+        _check_leaf_puts(GunGraph(spark, base, soul_gen=SoulGen(seed=7)), _resolve({}, base_rows), puts)
+
+    no_base()
+    store_base()
+
+
 def test_pubsub_update_shape(spark):
     """FIXTURES.md scenario 10 (TestGunPubSubSimpleRemote shape): a second
     writer's update lands in the first graph via the update log."""
@@ -382,6 +467,75 @@ def test_scoped_subscribe_live(spark, tmp_path):
     got = spark.sql("select * from sub_out").collect()
     assert len(got) == 1  # only the winning update for the subscribed key
     assert got[0]["value_string"] == "world" and got[0]["state"] == 200.0
+
+
+def _add_updates(spark, src, rows):
+    """One more file of update rows in the stream source directory."""
+    spark.createDataFrame(rows, QUAD_SCHEMA).coalesce(1).write.mode("append").parquet(src)
+
+
+def _drain(sub, checkpoint):
+    """Drain a subscription from ``checkpoint``; its (value, state) rows."""
+    got = []
+    q = (
+        sub.writeStream.foreachBatch(lambda df, _: got.extend(df.collect()))
+        .outputMode("update")
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+    )
+    try:
+        assert q.awaitTermination(120)
+    finally:
+        q.stop()
+    return [(decode_value(r), r["state"]) for r in got]
+
+
+def test_subscribe_stale_update_alone_emits_stored_value(spark, tmp_path):
+    """A6 live Fetch resolves each update against the stored value
+    (gun/storage.go:91-122) and emits the local value first
+    (gun/scoped_fetch.go:104-106): one stale update alone emits the stored
+    winner, never the stale value."""
+    g = fresh_graph(spark).put(["chat", "room1", "msg"], "hello", state=100.0).graph
+    soul, src = g.soul_of("chat", "room1"), str(tmp_path / "updates")
+    _add_updates(spark, src, [{"soul": soul, "field": "msg", **encode_value("stale"), "state": 50.0}])
+    sub = g.scoped("chat", "room1", "msg").subscribe(spark.readStream.schema(QUAD_SCHEMA).parquet(src))
+    assert _drain(sub, str(tmp_path / "ck")) == [("hello", 100.0)]
+
+
+def test_subscribe_restart_keeps_its_state(spark, tmp_path):
+    """A restart from the same checkpoint resumes the key's state: the
+    stored value is not emitted again, a second stale update emits
+    nothing, and a newer one emits itself."""
+    g = fresh_graph(spark).put(["chat", "room1", "msg"], "hello", state=100.0).graph
+    soul, src, ck = g.soul_of("chat", "room1"), str(tmp_path / "updates"), str(tmp_path / "ck")
+
+    def run(value, state):
+        _add_updates(spark, src, [{"soul": soul, "field": "msg", **encode_value(value), "state": state}])
+        sub = g.scoped("chat", "room1", "msg").subscribe(spark.readStream.schema(QUAD_SCHEMA).parquet(src))
+        return _drain(sub, ck)
+
+    assert run("stale", 50.0) == [("hello", 100.0)]
+    assert run("stale again", 60.0) == []
+    assert run("newer", 150.0) == [("newer", 150.0)]
+
+
+def test_subscribe_over_store_base_starts_from_snapshot_winner(spark, tmp_path):
+    """Over a read_quads base the subscription starts from the snapshot's
+    winner, and building it (the seed lookup included) runs no Spark job."""
+    base = _store_base(spark, tmp_path, PUT_BASE_ROWS)
+    src = str(tmp_path / "updates")
+    _add_updates(spark, src, [{"soul": "u1", "field": "name", **encode_value("al"), "state": 5.0}])
+    stream = spark.readStream.schema(QUAD_SCHEMA).parquet(src)
+    sc = spark.sparkContext
+    sc.setJobGroup("subscribe-seed", "subscribe-seed")
+    try:
+        sub = GunGraph(spark, base).scoped("root", "user", "name").subscribe(stream)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup("subscribe-seed")) == 0
+    assert _drain(sub, str(tmp_path / "ck")) == [("alice", 10.0)]
 
 
 def test_put_replay_literals_match_testdata(spark, sf_dir):

@@ -58,6 +58,22 @@ MATRIX = [
     (None, 5.0, {"#": "x"}, 5.0, 10.0, SAME_UPDATE),  # '{' > 'n'
     ({"#": "x"}, 5.0, "zzz", 5.0, 10.0, SAME_KEEP),  # '{' > '"'
     (2, 5.0, 10, 5.0, 10.0, SAME_KEEP),  # lexical, not numeric: '2' > '1'
+    # equal-state edge values, ranked by value_json_py(encode_value(v))
+    (-0.0, 5.0, 0, 5.0, 10.0, SAME_UPDATE),  # '-0.0' < '0': '-' (0x2d) < '0'
+    (0, 5.0, -0.0, 5.0, 10.0, SAME_KEEP),
+    (10**20, 5.0, 1e20, 5.0, 10.0, SAME_UPDATE),  # '100000000000000000000' < '1e+20'
+    (1e20, 5.0, 10**20, 5.0, 10.0, SAME_KEEP),
+    (10**20, 5.0, 10**20, 5.0, 10.0, SAME_KEEP),
+    (1.5, 5.0, "1.5", 5.0, 10.0, SAME_KEEP),  # '1.5' > '"1.5"': '1' > '"'
+    ("1.5", 5.0, 1.5, 5.0, 10.0, SAME_UPDATE),
+    ("a\u2028", 5.0, "a~", 5.0, 10.0, SAME_KEEP),  # U+2028 unescaped: e2 80 a8 > '~'
+    ("a~", 5.0, "a\u2028", 5.0, 10.0, SAME_UPDATE),
+    ("\x7f", 5.0, "~", 5.0, 10.0, SAME_KEEP),  # DEL unescaped: 0x7f > '~' (0x7e)
+    ("~", 5.0, "\x7f", 5.0, 10.0, SAME_UPDATE),
+    ({"#": "a"}, 5.0, {"#": "b"}, 5.0, 10.0, SAME_UPDATE),  # '{"#":"a"}' < '{"#":"b"}'
+    ({"#": "b"}, 5.0, {"#": "a"}, 5.0, 10.0, SAME_KEEP),
+    ({"#": "a"}, 5.0, {"#": "a"}, 5.0, 10.0, SAME_KEEP),
+    ({"#": "x"}, 5.0, '{"#":"x"}', 5.0, 10.0, SAME_KEEP),  # relation '{' > the string's '"'
 ]
 
 

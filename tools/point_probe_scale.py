@@ -9,9 +9,10 @@ live bucket of a manifest store, sorted by (soul, field) as
 
 - ``filter_ms``: one ``pq.read_table`` of the bucket with row filters on
   the soul, which is what a probe cost before buckets were cached;
-- ``cold_ms``: the first ``rows(soul)`` of a fresh ``StoreSnapshot``
-  (read and decode the bucket, check its order, search it), the median
-  of three snapshots;
+- ``cold_ms``, ``cold_q1_ms``, ``cold_q3_ms``: the first ``rows(soul)``
+  of a fresh ``StoreSnapshot`` (read and decode the bucket, check its
+  order, search it); median and quartiles over ``COLD_SNAPSHOTS`` fresh
+  snapshots, each probing a random soul;
 - ``warm_ms``: the median ``rows(soul)`` of random souls of the bucket
   once it is cached;
 - ``cached_kb``: the bytes the snapshot counts for the bucket it keeps
@@ -44,6 +45,7 @@ from esgopeta_spark.sources.io import StoreSnapshot, new_manifest, publish_manif
 from perfbench import gen  # noqa: E402
 
 BUCKET = 0
+COLD_SNAPSHOTS = 31  # first probes per scale: three moved the median by half between runs
 
 
 def write_bucket(path: str, spec: gen.GraphSpec, seed: int) -> list[str]:
@@ -70,15 +72,18 @@ def measure(path: str, souls: list[str], probes: int, rng: random.Random) -> dic
     picks = [rng.choice(souls) for _ in range(probes)]
     filtered = [ms(lambda s=s: pq.read_table(bucket_dir, filters=[("soul", "==", s)])) for s in picks[:20]]
     cold = []
-    for s in picks[:3]:
+    for s in (rng.choice(souls) for _ in range(COLD_SNAPSHOTS)):
         snap = StoreSnapshot.open(path)
         cold.append(ms(lambda: snap.rows(s)))
+    cold_q1, cold_med, cold_q3 = statistics.quantiles(cold, n=4)
     warm = [ms(lambda s=s: snap.rows(s)) for s in picks]
     return {
         "rows": pq.read_metadata(os.path.join(bucket_dir, "part-0.parquet")).num_rows,
         "file_kb": os.path.getsize(os.path.join(bucket_dir, "part-0.parquet")) / 1024,
         "filter_ms": statistics.median(filtered),
-        "cold_ms": statistics.median(cold),
+        "cold_ms": cold_med,
+        "cold_q1_ms": cold_q1,
+        "cold_q3_ms": cold_q3,
         "warm_ms": statistics.median(warm),
         "warm_p90_ms": statistics.quantiles(warm, n=10)[-1],
         "cached_kb": snap.cached_bytes / 1024,
@@ -92,7 +97,7 @@ def main() -> None:
     ap.add_argument("--seed", type=int, default=1)
     args = ap.parse_args()
     base = gen.GraphSpec()
-    cols = ["rows", "file_kb", "filter_ms", "cold_ms", "warm_ms", "warm_p90_ms", "cached_kb"]
+    cols = ["rows", "file_kb", "filter_ms", "cold_ms", "cold_q1_ms", "cold_q3_ms", "warm_ms", "warm_p90_ms", "cached_kb"]
     print(f"bucket {BUCKET} of {base.n_buckets}, seed {args.seed}, {args.probes} warm probes")
     print(f"{'users':>8} " + " ".join(f"{c:>12}" for c in cols))
     work = tempfile.mkdtemp(prefix="point_probe_scale-")
